@@ -14,9 +14,13 @@ Re-expresses the reference's collector architecture
 The transport is injected (``fetch: Callable[[str], Awaitable[dict]]``)
 so tests run hermetically and the engine has no HTTP dependency; wire in
 an httpx/aiohttp client at deployment. The output is a bronze-layer
-record list ready for ``spark.createDataFrame`` — re-runs then read
-bronze parquet instead of refetching, which replaces the reference's
-Redis response cache (SURVEY.md §4.3).
+record list ready for ``spark.createDataFrame``.
+
+The reference's Redis response cache (api.py:174-221) is covered in two
+parts: within a run, ``collect_with_enrichment`` fetches each distinct
+enrichment URL once and every item with that URL shares the response;
+across runs, re-runs read bronze parquet instead of refetching
+(SURVEY.md §4.3).
 
 At scale: run this driver-side for small collections; for large fetch
 fan-out, partition a DataFrame of page cursors / URLs and run the same
@@ -46,6 +50,7 @@ class FetchStats:
     enriched: int = 0
     errors: int = 0
     retries: int = 0
+    coalesced: int = 0  # items that awaited an earlier or in-flight fetch of their URL
     skipped: list[str] = field(default_factory=list)
 
 
@@ -133,10 +138,30 @@ async def collect_with_enrichment(
     isolates per-NFT exceptions); items without an enrichment URL pass
     through (nft.py:18-20); sentinel shutdown after the producer drains
     (nft.py:89-96).
+
+    Each distinct enrichment URL is fetched once per call, standing in
+    for the reference's response cache (api.py:174-221): the first item
+    with a URL starts the fetch, later items await the same one, in
+    flight or done, and count in ``stats.coalesced``. A URL that fails
+    after the fetcher's retries leaves every item using it bare and
+    counts one error per item. The ``extra`` dict passed to
+    ``apply_enrichment`` is shared by all items with that URL and must
+    not be mutated. If listing fails, the workers and unfinished fetches
+    are cancelled before the error propagates.
     """
     queue: asyncio.Queue[dict | None] = asyncio.Queue(maxsize=queue_size)
     out: list[dict] = []
     stats = enrich_fetcher.stats
+    fetches: dict[str, asyncio.Task[dict]] = {}
+
+    async def enrichment(url: str) -> dict:
+        fetch = fetches.get(url)
+        if fetch is None:
+            fetch = fetches[url] = asyncio.create_task(enrich_fetcher.get(url))
+        else:
+            stats.coalesced += 1
+        # a cancelled waiter must not cancel a fetch other items share
+        return await asyncio.shield(fetch)
 
     async def producer() -> None:
         url: str | None = first_url
@@ -159,7 +184,7 @@ async def collect_with_enrichment(
                     out.append(item)
                     continue
                 try:
-                    extra = await enrich_fetcher.get(url)
+                    extra = await enrichment(url)
                     out.append(apply_enrichment(item, extra))
                     stats.enriched += 1
                 except Exception:
@@ -170,8 +195,14 @@ async def collect_with_enrichment(
                 queue.task_done()
 
     tasks = [asyncio.create_task(worker()) for _ in range(workers)]
-    await producer()
-    for _ in tasks:
-        await queue.put(None)
-    await asyncio.gather(*tasks)
+    try:
+        await producer()
+        for _ in tasks:
+            await queue.put(None)
+        await asyncio.gather(*tasks)
+    finally:
+        pending = [*tasks, *fetches.values()]
+        for task in pending:
+            task.cancel()
+        await asyncio.gather(*pending, return_exceptions=True)
     return out

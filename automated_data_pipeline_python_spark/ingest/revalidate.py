@@ -10,7 +10,7 @@ on the engine's bronze-layer model:
 - 304 Not Modified re-serves the cached body and refreshes its TTL
 - 200 replaces the entry; ``no-store`` responses are never cached
 - ``stale-while-revalidate`` serves the stale body immediately and
-  revalidates in a background task
+  revalidates in a background task, at most one per URL at a time
 
 The transport is injected (``fetch(url, headers) -> (status, headers,
 body)``) so tests run hermetically and the engine carries no HTTP
@@ -90,7 +90,8 @@ class ConditionalFetcher:
         self.store = store if store is not None else {}
         self._clock = clock
         self.stats = stats or RevalidateStats()
-        self._background: set[asyncio.Task] = set()
+        # url → its running stale-while-revalidate task
+        self._background: dict[str, asyncio.Task] = {}
         # the conditional exchange is the retried unit
         self._retry = RetryingFetcher(
             self._exchange,
@@ -157,16 +158,17 @@ class ConditionalFetcher:
             return await self._retry.get(url)  # unconditional refetch
         if re.search(r"stale-while-revalidate", cc, re.IGNORECASE):
             # serve stale now, revalidate in the background
-            task = asyncio.create_task(self._retry.get(url))
-            self._background.add(task)
-            task.add_done_callback(self._background.discard)
+            if url not in self._background:
+                task = asyncio.create_task(self._retry.get(url))
+                self._background[url] = task
+                task.add_done_callback(lambda _t: self._background.pop(url, None))
             return cached.body
         return await self._retry.get(url)
 
     async def drain_background(self) -> None:
         """Await outstanding stale-while-revalidate tasks (tests/shutdown)."""
         if self._background:
-            await asyncio.gather(*self._background, return_exceptions=True)
+            await asyncio.gather(*self._background.values(), return_exceptions=True)
 
 
 # ---------------------------------------------------------------------------

@@ -143,7 +143,7 @@ def run_pipeline(spark, output_dir: str, transport=None, first_url=None) -> dict
     def counters():
         merged = {
             k: asdict(list_fetcher.stats)[k] + asdict(enrich_fetcher.stats)[k]
-            for k in ("pages", "items", "enriched", "errors", "retries")
+            for k in ("pages", "items", "enriched", "coalesced", "errors", "retries")
         }
         return merged
 

@@ -139,18 +139,30 @@ class TestCacheKeys:
         assert k1 != build_cache_key("http://x/y?a=1&b=3")
 
 
-def _paged_api(n_pages: int, per_page: int, fail_urls: dict[str, int] | None = None):
-    """Fake cursor-paginated endpoint; fail_urls[url] = #failures before ok."""
+def _paged_api(
+    n_pages: int,
+    per_page: int,
+    fail_urls: dict[str, int] | None = None,
+    n_urls: int = 3,
+    calls: list[str] | None = None,
+):
+    """Fake cursor-paginated endpoint; fail_urls[url] = #failures before ok.
+
+    Item i's metadata URL is ``http://meta/{i % n_urls}``; every request
+    URL is appended to ``calls`` when given.
+    """
     remaining = dict(fail_urls or {})
 
     async def fetch(url: str) -> dict:
+        if calls is not None:
+            calls.append(url)
         if url in remaining and remaining[url] > 0:
             remaining[url] -= 1
             raise ConnectionError(f"flaky {url}")
         if url.startswith("http://api/page/"):
             page = int(url.rsplit("/", 1)[1])
             items = [
-                {"identifier": str(page * per_page + i), "metadata_url": f"http://meta/{(page * per_page + i) % 3}"}
+                {"identifier": str(page * per_page + i), "metadata_url": f"http://meta/{(page * per_page + i) % n_urls}"}
                 for i in range(per_page)
             ]
             nxt = f"http://api/page/{page + 1}" if page + 1 < n_pages else None
@@ -164,6 +176,30 @@ def _paged_api(n_pages: int, per_page: int, fail_urls: dict[str, int] | None = N
 
 def _next_url(page: dict, _cur: str) -> str | None:
     return page.get("next")
+
+
+def _apply(item: dict, extra: dict) -> dict:
+    return {**item, "traits": extra["attributes"]}
+
+
+def _collect(fetch, max_attempts: int = 2) -> tuple[list[dict], FetchStats]:
+    ef = RetryingFetcher(fetch, max_attempts=max_attempts, wait_initial=0.001)
+    out = asyncio.run(
+        collect_with_enrichment(
+            RetryingFetcher(fetch, max_attempts=max_attempts, wait_initial=0.001),
+            ef,
+            "http://api/page/0",
+            _next_url,
+            enrich_url=lambda it: it.get("metadata_url"),
+            apply_enrichment=_apply,
+            workers=4,
+        )
+    )
+    return out, ef.stats
+
+
+def _by_id(records: list[dict]) -> list[dict]:
+    return sorted(records, key=lambda r: int(r["identifier"]))
 
 
 class TestFetcher:
@@ -215,6 +251,91 @@ class TestFetcher:
         assert len(enriched) == 4  # urls meta/0 and meta/1
         assert len(bare) == 2  # meta/2 items survive bare
         assert ef.stats.errors == 2
+
+    def test_each_distinct_url_fetched_once_while_in_flight(self):
+        # Every metadata fetch blocks until all 12 workers hold an item, so
+        # the repeats find their URL's fetch still in flight.
+        n_items, calls = 12, []
+        base = _paged_api(1, n_items, n_urls=3)
+        taken: list[str] = []
+
+        async def run() -> tuple[list[dict], FetchStats]:
+            gate = asyncio.Event()
+
+            async def fetch(url: str) -> dict:
+                if url.startswith("http://meta/"):
+                    calls.append(url)
+                    await gate.wait()
+                return await base(url)
+
+            def enrich_url(item: dict) -> str:
+                taken.append(item["identifier"])
+                if len(taken) == n_items:
+                    gate.set()
+                return item["metadata_url"]
+
+            ef = RetryingFetcher(fetch, wait_initial=0.001)
+            collect = collect_with_enrichment(
+                RetryingFetcher(fetch, wait_initial=0.001),
+                ef,
+                "http://api/page/0",
+                _next_url,
+                enrich_url=enrich_url,
+                apply_enrichment=_apply,
+                workers=n_items,
+            )
+            return await asyncio.wait_for(collect, timeout=10), ef.stats
+
+        out, stats = asyncio.run(run())
+        assert sorted(calls) == ["http://meta/0", "http://meta/1", "http://meta/2"]
+        page = asyncio.run(base("http://api/page/0"))
+        per_item = [_apply(it, asyncio.run(base(it["metadata_url"]))) for it in page["items"]]
+        assert _by_id(out) == _by_id(per_item)
+        assert (stats.enriched, stats.coalesced, stats.errors) == (12, 9, 0)
+
+    def test_unique_urls_one_request_per_item(self):
+        calls: list[str] = []
+        out, stats = _collect(_paged_api(2, 5, n_urls=10, calls=calls))
+        meta = [u for u in calls if u.startswith("http://meta/")]
+        assert sorted(meta) == sorted(f"http://meta/{i}" for i in range(10))
+        assert (len(out), stats.enriched, stats.coalesced) == (10, 10, 0)
+
+    def test_failing_shared_url_attempted_max_attempts_in_total(self):
+        # 12 items over 3 URLs: the 4 items on meta/2 share one dead fetch.
+        calls: list[str] = []
+        fetch = _paged_api(3, 4, fail_urls={"http://meta/2": 99}, calls=calls)
+        out, stats = _collect(fetch, max_attempts=3)
+        assert calls.count("http://meta/2") == 3
+        bare = [o for o in out if "traits" not in o]
+        assert sorted(o["identifier"] for o in bare) == ["11", "2", "5", "8"]
+        assert (len(out), stats.enriched, stats.errors) == (12, 8, 4)
+        assert stats.retries == 2
+
+    def test_listing_failure_leaves_no_tasks_behind(self):
+        # Page 1 always fails; by then every worker awaits a metadata
+        # fetch that never completes on its own.
+        base = _paged_api(2, 4, fail_urls={"http://api/page/1": 99})
+
+        async def fetch(url: str) -> dict:
+            if url.startswith("http://meta/"):
+                await asyncio.Event().wait()
+            return await base(url)
+
+        async def outer() -> bool:
+            collect = collect_with_enrichment(
+                RetryingFetcher(fetch, max_attempts=2, wait_initial=0.001),
+                RetryingFetcher(fetch, wait_initial=0.001),
+                "http://api/page/0",
+                _next_url,
+                enrich_url=lambda it: it.get("metadata_url"),
+                apply_enrichment=_apply,
+                workers=4,
+            )
+            with pytest.raises(ConnectionError):
+                await asyncio.wait_for(collect, timeout=10)
+            return asyncio.all_tasks() == {asyncio.current_task()}
+
+        assert asyncio.run(outer())
 
 
 class TestEnrichmentJoin:

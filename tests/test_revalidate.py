@@ -144,6 +144,26 @@ def test_stale_while_revalidate_serves_stale_then_updates(rig):
     assert f.store["u"].body == {"v": 2}  # background revalidation landed
 
 
+def test_concurrent_stale_hits_share_one_revalidation(rig):
+    server, clock, f = rig
+    server.responses = [
+        (200, {"ETag": 'W/"a"',
+               "Cache-Control": "max-age=1, stale-while-revalidate=60"}, {"v": 1}),
+        (200, {"ETag": 'W/"b"', "Cache-Control": "max-age=60"}, {"v": 2}),
+    ]
+
+    async def scenario():
+        await f.get("u")
+        clock.now += 5
+        served = await asyncio.gather(*(f.get("u") for _ in range(10)))
+        await f.drain_background()
+        return served
+
+    assert [s["v"] for s in run(scenario())] == [1] * 10
+    assert len(server.requests) == 2  # the first fetch plus one revalidation
+    assert f.store["u"].body == {"v": 2}
+
+
 def test_retry_composes_with_conditional_exchange(rig):
     server, clock, f = rig
     server.fail_first = 2
