@@ -24,18 +24,12 @@ import re
 from collections.abc import Iterator, MutableMapping
 from typing import Any
 
-from automated_data_pipeline_python_spark.ingest.revalidate import CacheEntry
+from automated_data_pipeline_python_spark.ingest.revalidate import (
+    CacheEntry,
+    get_max_age,
+)
 
 DEFAULT_MAX_TTL = 86_400  # reference cache.py:18 — 24 h ceiling
-
-
-def get_max_age(cache_control: str) -> int:
-    """max-age seconds from a Cache-Control header (0 when absent).
-
-    Mirrors reference cache.py:77-82 (case-insensitive regex).
-    """
-    m = re.search(r"max-age=(\d+)", cache_control or "", re.IGNORECASE)
-    return int(m.group(1)) if m else 0
 
 
 def calculate_ttl(cache_control: str, max_ttl: int = DEFAULT_MAX_TTL) -> int:
@@ -51,31 +45,6 @@ def calculate_ttl(cache_control: str, max_ttl: int = DEFAULT_MAX_TTL) -> int:
     if ttl == 0 or ttl > max_ttl:
         ttl = max_ttl
     return ttl
-
-
-def _dumps(entry: CacheEntry) -> str:
-    return json.dumps(
-        {
-            "url": entry.url,
-            "body": entry.body,
-            "etag": entry.etag,
-            "last_modified": entry.last_modified,
-            "cache_control": entry.cache_control,
-            "fetched_at": entry.fetched_at,
-        }
-    )
-
-
-def _loads(raw: str) -> CacheEntry:
-    d = json.loads(raw)
-    return CacheEntry(
-        url=d["url"],
-        body=d["body"],
-        etag=d.get("etag"),
-        last_modified=d.get("last_modified"),
-        cache_control=d.get("cache_control", ""),
-        fetched_at=d.get("fetched_at", 0.0),
-    )
 
 
 class RedisCacheStore(MutableMapping):
@@ -100,11 +69,11 @@ class RedisCacheStore(MutableMapping):
         raw = self._r.get(self._key(url))
         if raw is None:
             raise KeyError(url)
-        return _loads(raw)
+        return CacheEntry.from_record(json.loads(raw))
 
     def __setitem__(self, url: str, entry: CacheEntry) -> None:
         ttl = calculate_ttl(entry.cache_control, self._max_ttl)
-        self._r.set(self._key(url), _dumps(entry), ex=ttl)
+        self._r.set(self._key(url), json.dumps(entry.to_record()), ex=ttl)
 
     def __delitem__(self, url: str) -> None:
         if not self._r.delete(self._key(url)):

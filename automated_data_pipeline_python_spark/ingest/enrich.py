@@ -36,6 +36,23 @@ def enrichment_join(nfts: DataFrame, metadata: DataFrame, url_col: str = "metada
     return nfts.join(metadata, on=url_col, how="left")
 
 
+async def _fetch_each(fetcher, urls: list[str], payload_field: str) -> list[tuple]:
+    """``(url, payload[payload_field])`` for every URL, fetched
+    concurrently through ``fetcher`` (a :class:`RetryingFetcher`). A URL
+    whose fetch still fails after retries yields ``(url, None)`` and
+    counts in ``fetcher.stats.errors``; it never fails the batch."""
+
+    async def one(u: str) -> tuple:
+        try:
+            payload = await fetcher.get(u)
+            return (u, payload.get(payload_field))
+        except Exception:
+            fetcher.stats.errors += 1
+            return (u, None)
+
+    return list(await asyncio.gather(*(one(u) for u in urls)))
+
+
 def fetch_distinct_urls(
     df: DataFrame,
     fetch: Callable[[str], Awaitable[dict]],
@@ -57,19 +74,7 @@ def fetch_distinct_urls(
         for r in df.select(url_col).where(F.col(url_col).isNotNull() & (F.col(url_col) != "")).distinct().collect()
     ]
     fetcher = RetryingFetcher(fetch, max_concurrency=max_concurrency)
-
-    async def run() -> list[tuple]:
-        async def one(u: str) -> tuple:
-            try:
-                payload = await fetcher.get(u)
-                return (u, payload.get(payload_field))
-            except Exception:
-                fetcher.stats.errors += 1
-                return (u, None)
-
-        return list(await asyncio.gather(*(one(u) for u in urls)))
-
-    rows = asyncio.run(run())
+    rows = asyncio.run(_fetch_each(fetcher, urls, payload_field))
     schema = T.StructType(
         [
             T.StructField(url_col, T.StringType()),
@@ -190,21 +195,10 @@ def fetch_distinct_urls_distributed(
 
         transport = transport_factory()
         fetcher = RetryingFetcher(transport, max_concurrency=max_concurrency)
-
-        async def fetch_all(urls_batch: list[str]) -> list[tuple]:
-            async def one(u: str) -> tuple:
-                try:
-                    payload = await fetcher.get(u)
-                    return (u, payload.get(payload_field))
-                except Exception:
-                    fetcher.stats.errors += 1
-                    return (u, None)
-
-            return list(await asyncio.gather(*(one(u) for u in urls_batch)))
-
         try:
             for pdf in batches:
-                rows = asyncio.run(fetch_all(pdf[url_col].tolist()))
+                urls_batch = pdf[url_col].tolist()
+                rows = asyncio.run(_fetch_each(fetcher, urls_batch, payload_field))
                 yield pd.DataFrame(
                     {
                         url_col: [r[0] for r in rows],

@@ -38,7 +38,14 @@ from automated_data_pipeline_python_spark.ingest.fetcher import (
 # (status, response headers, parsed body)
 ConditionalFetchFn = Callable[[str, dict], Awaitable[tuple[int, dict, dict]]]
 
-_MAX_AGE = re.compile(r"max-age=(\d+)", re.IGNORECASE)
+
+def get_max_age(cache_control: str) -> int:
+    """max-age seconds from a Cache-Control header (0 when absent).
+
+    Mirrors reference cache.py:77-82 (case-insensitive regex).
+    """
+    m = re.search(r"max-age=(\d+)", cache_control or "", re.IGNORECASE)
+    return int(m.group(1)) if m else 0
 
 
 @dataclass
@@ -53,11 +60,34 @@ class CacheEntry:
 
     def __post_init__(self) -> None:
         if self.max_age is None:
-            m = _MAX_AGE.search(self.cache_control or "")
-            self.max_age = float(m.group(1)) if m else 0.0
+            self.max_age = float(get_max_age(self.cache_control))
 
     def is_fresh(self, now: float) -> bool:
         return (now - self.fetched_at) < (self.max_age or 0.0)
+
+    def to_record(self) -> dict:
+        """The stored fields as one plain record (a bronze-sidecar row or
+        a Redis JSON value); ``max_age`` is derived, so it is left out."""
+        return {
+            "url": self.url,
+            "body": self.body,
+            "etag": self.etag,
+            "last_modified": self.last_modified,
+            "cache_control": self.cache_control,
+            "fetched_at": self.fetched_at,
+        }
+
+    @classmethod
+    def from_record(cls, r: dict) -> CacheEntry:
+        """Inverse of :meth:`to_record`."""
+        return cls(
+            url=r["url"],
+            body=r["body"],
+            etag=r.get("etag"),
+            last_modified=r.get("last_modified"),
+            cache_control=r.get("cache_control", ""),
+            fetched_at=r.get("fetched_at", 0.0),
+        )
 
 
 @dataclass
@@ -178,29 +208,9 @@ class ConditionalFetcher:
 
 def store_records(store: dict[str, CacheEntry]) -> list[dict]:
     """Store → rows for ``spark.createDataFrame`` (bronze sidecar)."""
-    return [
-        {
-            "url": e.url,
-            "body": e.body,
-            "etag": e.etag,
-            "last_modified": e.last_modified,
-            "cache_control": e.cache_control,
-            "fetched_at": e.fetched_at,
-        }
-        for e in store.values()
-    ]
+    return [e.to_record() for e in store.values()]
 
 
 def load_records(rows: list[dict]) -> dict[str, CacheEntry]:
     """Rows → store (inverse of :func:`store_records`)."""
-    return {
-        r["url"]: CacheEntry(
-            url=r["url"],
-            body=r["body"],
-            etag=r.get("etag"),
-            last_modified=r.get("last_modified"),
-            cache_control=r.get("cache_control", ""),
-            fetched_at=r.get("fetched_at", 0.0),
-        )
-        for r in rows
-    }
+    return {r["url"]: CacheEntry.from_record(r) for r in rows}

@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from automated_data_pipeline_python_spark.queries.catalog import register
+from automated_data_pipeline_python_spark.queries.catalog import register, stage
 from automated_data_pipeline_python_spark.tables import load_scaled
 
 _K = 8  # seed cells: embeddings of vec_id < _K (same seeding as IVF)
@@ -158,10 +158,10 @@ _KM_DOT_CC = (
 )
 
 # Iteration 1: seed centroids (vec_id < _K) -> assign -> per-(cell,d)
-# snapped means -> 8-row (cell, c, cnrm2) relation. Materialized by the
+# snapped means -> 8-row (cell, c, cnrm2) relation. Staged by the
 # query fn (it feeds both the iteration-2 assignment and the final
-# drift join; Spark inlines CTEs, so the inline form would re-run the
-# whole iteration-1 corpus pass per reference). The assignment carries
+# drift join; inlined, it would re-run the whole iteration-1 corpus
+# pass per reference). The assignment carries
 # v, so the member explode needs NO join back to the corpus.
 _SPARK_C1_SQL = f"""
 WITH cents0 AS (
@@ -262,9 +262,7 @@ def kmeans_lloyd_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
     spark.sql(_SPARK_BASE_DERIVE).createOrReplaceTempView("km_base")
-    spark.sql(_SPARK_C1_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "km_c1"
-    )
+    stage(spark, "km_c1", spark.sql(_SPARK_C1_SQL))
     return spark.sql(_SPARK_SQL)
 
 
@@ -353,14 +351,11 @@ _PI_DUCK_SQL = (
 def embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dominant eigenvector (2 power iterations) + Rayleigh quotient.
 
-    The exploded (vec, dim, val) relation feeds three pipeline stages;
-    Spark inlines CTEs, so it is materialized once via localCheckpoint
-    (DuckDB materializes shared CTEs itself — single-statement oracle).
+    The exploded (vec, dim, val) relation feeds three pipeline stages,
+    so it is staged once (single-statement oracle).
     """
     load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    spark.sql(_PI_X_SPARK).localCheckpoint(eager=True).createOrReplaceTempView(
-        "pi_x"
-    )
+    stage(spark, "pi_x", spark.sql(_PI_X_SPARK))
     return spark.sql(_power_iter_tail("pi_x"))
 
 
@@ -447,35 +442,33 @@ def selection_kcenter_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     any selected center).
 
     Each round's running-min relation feeds two consumers (the argmax
-    pick and the next round's update); Spark inlines CTEs, so every
-    d-relation is materialized via localCheckpoint — otherwise round N
+    pick and the next round's update), so every d-relation is staged —
+    otherwise round N
     re-executes the whole prefix exponentially (the BPE-rounds
     discipline).
     """
     load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
     dot = lambda a, b: _SPARK_DOT.format(a=a, b=b)  # noqa: E731
     d2 = lambda bn, a, b, cn: _kc_d2(dot, bn, a, b, cn)  # noqa: E731
-    spark.sql(_SPARK_BASE_DERIVE).localCheckpoint(eager=True).createOrReplaceTempView(
-        "kc_base"
-    )
+    stage(spark, "kc_base", spark.sql(_SPARK_BASE_DERIVE))
     spark.sql(
         "SELECT vec_id, v, nrm2 FROM kc_base ORDER BY vec_id LIMIT 1"
     ).createOrReplaceTempView("kc_s0")
-    spark.sql(
+    stage(spark, "kc_d1", spark.sql(
         "SELECT b.vec_id, b.v, b.nrm2, "
         + d2("b.nrm2", "b.v", "s.v", "s.nrm2")
         + " AS dmin FROM kc_base b CROSS JOIN kc_s0 s"
-    ).localCheckpoint(eager=True).createOrReplaceTempView("kc_d1")
+    ))
     for r in range(1, _KC_ROUNDS + 1):
         spark.sql(
             f"SELECT vec_id, v, nrm2, dmin FROM kc_d{r}"
             f" ORDER BY dmin DESC, vec_id LIMIT 1"
         ).createOrReplaceTempView(f"kc_s{r}")
-        spark.sql(
+        stage(spark, f"kc_d{r + 1}", spark.sql(
             f"SELECT d.vec_id, d.v, d.nrm2, "
             f"least(d.dmin, {d2('d.nrm2', 'd.v', 's.v', 's.nrm2')}) AS dmin "
             f"FROM kc_d{r} d CROSS JOIN kc_s{r} s"
-        ).localCheckpoint(eager=True).createOrReplaceTempView(f"kc_d{r + 1}")
+        ))
     picks = ["SELECT 0 AS round, vec_id, 0e0 AS sel_dist2 FROM kc_s0"] + [
         f"SELECT {r} AS round, vec_id, dmin AS sel_dist2 FROM kc_s{r}"
         for r in range(1, _KC_ROUNDS + 1)
@@ -625,9 +618,7 @@ def clustering_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
     same-partner ratio, and the global index — the internal quality
     gate that scales where all-pairs silhouette cannot."""
     load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    spark.sql(_SPARK_BASE_DERIVE).localCheckpoint(eager=True).createOrReplaceTempView(
-        "km_base"
-    )
+    stage(spark, "km_base", spark.sql(_SPARK_BASE_DERIVE))
     return spark.sql(_DB_SPARK_SQL)
 
 
@@ -737,9 +728,7 @@ def clustering_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the external cluster-quality gate beside Davies-Bouldin's
     internal one."""
     load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    spark.sql(_SPARK_BASE_DERIVE).localCheckpoint(eager=True).createOrReplaceTempView(
-        "km_base"
-    )
+    stage(spark, "km_base", spark.sql(_SPARK_BASE_DERIVE))
     return spark.sql(_PURITY_SPARK_SQL)
 
 
@@ -762,8 +751,7 @@ def clustering_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # loses exactness past 2^53). ARI/RI are single float expressions over
 # the 4-number rollup, snapped at output. The contingency grid is
 # (cells x labels)-bounded and referenced by seven scalar subqueries,
-# so the Spark side materializes it once (localCheckpoint — Spark
-# inlines CTEs; DuckDB materializes shared CTEs itself); the corpus
+# so the Spark side stages it once; the corpus
 # shuffles once on the argmin key and once on the grid key.
 
 
@@ -872,12 +860,8 @@ def clustering_adjusted_rand(spark: SparkSession, sf_dir: str) -> DataFrame:
     external gate purity cannot be (exact doubled DECIMAL pair sums;
     the contingency grid materializes once for its seven references)."""
     load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    spark.sql(_SPARK_BASE_DERIVE).localCheckpoint(eager=True).createOrReplaceTempView(
-        "km_base"
-    )
-    spark.sql(_ARI_GRID_SPARK_SQL).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("ari_cl")
+    stage(spark, "km_base", spark.sql(_SPARK_BASE_DERIVE))
+    stage(spark, "ari_cl", spark.sql(_ARI_GRID_SPARK_SQL))
     return spark.sql("WITH " + _ARI_TAIL.format(cl="ari_cl"))
 
 
@@ -1006,7 +990,5 @@ def clustering_silhouette_simplified(spark: SparkSession, sf_dir: str) -> DataFr
     scores, linear in members where all-pairs silhouette is
     quadratic."""
     load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    spark.sql(_SPARK_BASE_DERIVE).localCheckpoint(eager=True).createOrReplaceTempView(
-        "km_base"
-    )
+    stage(spark, "km_base", spark.sql(_SPARK_BASE_DERIVE))
     return spark.sql(_SIL_SPARK_SQL)

@@ -33,7 +33,7 @@ from automated_data_pipeline_python_spark.functions.text import (
     duck_stopword_hits,
     spark_stopword_hits,
 )
-from automated_data_pipeline_python_spark.queries.catalog import register
+from automated_data_pipeline_python_spark.queries.catalog import register, stage
 from automated_data_pipeline_python_spark.tables import load_scaled
 
 _S_TOK = SPARK_TOKENS.format(col="text")
@@ -211,13 +211,13 @@ def doc_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine ulp error is ~1e-13, far inside the 1e-6 snap.
     """
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(
+    stage(spark, "ug_tok", spark.sql(
         f"""
         SELECT doc_id, token
         FROM (SELECT doc_id, {_S_TOK} AS w FROM documents)
         LATERAL VIEW explode(w) t AS token
         """
-    ).localCheckpoint(eager=True).createOrReplaceTempView("ug_tok")
+    ))
     return spark.sql(
         "WITH tok AS (SELECT * FROM ug_tok),\n"
         + _surprisal_tail("CAST(({a}) DIV ({b}) AS BIGINT)")
@@ -288,13 +288,13 @@ def sample_importance_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR importance weights: top-50 candidates by unigram
     log-likelihood ratio toward the 'src0' target distribution."""
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(
+    stage(spark, "dsir_tok", spark.sql(
         f"""
         SELECT doc_id, source, token
         FROM (SELECT doc_id, source, {_S_TOK} AS w FROM documents)
         LATERAL VIEW explode(w) t AS token
         """
-    ).localCheckpoint(eager=True).createOrReplaceTempView("dsir_tok")
+    ))
     return spark.sql(f"WITH tok AS (SELECT * FROM dsir_tok),\n{_DSIR_TAIL}")
 
 
@@ -387,9 +387,7 @@ _GOPHER_DUCK_SQL = (
 def quality_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-rule pass/fail census for a Gopher-style filter suite."""
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(_gopher_feats_sql(True)).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("gopher_census")
+    stage(spark, "gopher_census", spark.sql(_gopher_feats_sql(True)))
     return spark.sql(_GOPHER_TAIL.replace("{rel}", "gopher_census"))
 
 
@@ -454,10 +452,10 @@ _OOV_DUCK_SQL = (
 def vocab_coverage_oov_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Held-out token coverage and OOV rate vs top-k training vocab."""
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(
+    stage(spark, "oov_tok", spark.sql(
         f"SELECT source, tok AS term FROM "
         f"(SELECT source, explode({_S_TOK}) AS tok FROM documents)"
-    ).localCheckpoint(eager=True).createOrReplaceTempView("oov_tok")
+    ))
     return spark.sql(
         "WITH tok AS (SELECT * FROM oov_tok),\n"
         + _OOV_TAIL.replace(

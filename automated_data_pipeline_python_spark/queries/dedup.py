@@ -35,8 +35,8 @@ from automated_data_pipeline_python_spark.functions.text import (
     spark_hash60,
     spark_word_shingles,
 )
-from automated_data_pipeline_python_spark.queries.catalog import register
-from automated_data_pipeline_python_spark.tables import load, load_scaled
+from automated_data_pipeline_python_spark.queries.catalog import register, stage
+from automated_data_pipeline_python_spark.tables import load_scaled, scaled_sql
 
 _S_TOK = SPARK_TOKENS.format(col="text")
 _D_TOK = DUCK_TOKENS.format(col="text")
@@ -51,30 +51,6 @@ _BAND = 4
 _PRIME = 2_147_483_647
 _B_MULT = 12_582_917
 _JACCARD_THRESHOLD = 0.5
-
-
-def _docs_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(sql)
-
-
-def _materialize_view(df: DataFrame, name: str) -> None:
-    """Compute once and register for reuse within a query.
-
-    Spark inlines CTEs, so a WITH-subtree referenced N times runs N
-    times; self-joining pipelines (LSH bands, simhash chunks) would pay
-    the whole hash pipeline repeatedly. ``localCheckpoint`` materializes
-    the intermediate (GC-managed, no lingering cache entries), and a
-    temp view exposes it to the tail SQL. DuckDB materializes multiply-
-    referenced CTEs on its own, so oracles keep the single-statement
-    form.
-    """
-    df.localCheckpoint(eager=True).createOrReplaceTempView(name)
-
-
-def _emb_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    return spark.sql(sql)
 
 
 # ---------------------------------------------------------------------------
@@ -113,7 +89,7 @@ def dedup_exact_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     mirrors the reference's cache key (sha256 of normalized content,
     reference pipeline/utils/cache.py:58-74).
     """
-    return _docs_sql(spark, sf_dir, _EXACT_SPARK_SQL)
+    return scaled_sql(spark, sf_dir, "documents", _EXACT_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -302,7 +278,7 @@ def dedup_minhash_lsh_uncapped(spark: SparkSession, sf_dir: str) -> DataFrame:
     against exact-Jaccard ground truth.
     """
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    _materialize_view(spark.sql(_MINHASH_SETS_SPARK), "mh_sets")
+    stage(spark, "mh_sets", spark.sql(_MINHASH_SETS_SPARK))
     return spark.sql(_MINHASH_TAIL_SPARK)
 
 
@@ -432,7 +408,7 @@ _SIMHASH_DUCK_SQL = _SIMHASH_CORE_DUCK + "SELECT doc_id, simhash FROM sig"
 @register("dedup_simhash_signatures", oracle=_SIMHASH_DUCK_SQL)
 def dedup_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """32-bit SimHash per document (sign of per-bit weighted token sums)."""
-    return _docs_sql(spark, sf_dir, _SIMHASH_SPARK_SQL)
+    return scaled_sql(spark, sf_dir, "documents", _SIMHASH_SPARK_SQL)
 
 
 # Chunk-blocked near-dup pairs: 4 byte-chunks of the signature; pairs
@@ -501,8 +477,10 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     no DISTINCT exchange follows the join. Pigeonhole: hamming ≤ 3 over
     4 chunks guarantees ≥ 1 agreeing chunk, so blocking stays complete.
     """
-    _materialize_view(
-        _docs_sql(spark, sf_dir, _SIMHASH_SPARK_SQL), "simhash_sig"
+    stage(
+        spark,
+        "simhash_sig",
+        scaled_sql(spark, sf_dir, "documents", _SIMHASH_SPARK_SQL),
     )
     return spark.sql(_SIMHASH_PAIRS_TAIL_SPARK)
 
@@ -616,7 +594,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     discovery shuffles (doc_id, h) ints, never shingle strings.
     """
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    _materialize_view(spark.sql(_MINHASH_SETS_SPARK), "ng_sets")
+    stage(spark, "ng_sets", spark.sql(_MINHASH_SETS_SPARK))
     return spark.sql(_NGRAM_SETS_TAIL_SPARK)
 
 
@@ -782,9 +760,9 @@ def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly on the threshold survivors via the full string sets.
     """
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    _materialize_view(spark.sql(_CAPPED_SETS_SPARK), "cp_sets")
-    _materialize_view(spark.sql(_CAPPED_HOT_SPARK), "cp_hot")
-    _materialize_view(spark.sql(_CAPPED_COLD_SPARK), "cp_cold")
+    stage(spark, "cp_sets", spark.sql(_CAPPED_SETS_SPARK))
+    stage(spark, "cp_hot", spark.sql(_CAPPED_HOT_SPARK))
+    stage(spark, "cp_cold", spark.sql(_CAPPED_COLD_SPARK))
     return spark.sql(_NGRAM_CAPPED_TAIL_SPARK)
 
 
@@ -857,7 +835,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_mllib_parity.py.
     """
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    _materialize_view(spark.sql(_MINHASH_SETS_SPARK), "mh_sets")
+    stage(spark, "mh_sets", spark.sql(_MINHASH_SETS_SPARK))
     return spark.sql(_MINHASH_CAPPED_TAIL_SPARK)
 
 
@@ -913,7 +891,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     is Σ per-block² rather than global²; at 100 TB the block key comes
     from a coarse quantizer (IVF centroid), same plan shape.
     """
-    return _emb_sql(spark, sf_dir, _EMB_SPARK_SQL)
+    return scaled_sql(spark, sf_dir, "embeddings", _EMB_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1015,7 +993,7 @@ def dedup_remove_near_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_scaled(spark, sf_dir, "documents")
     docs.createOrReplaceTempView("documents")
-    _materialize_view(spark.sql(_MINHASH_SETS_SPARK), "ng_sets")
+    stage(spark, "ng_sets", spark.sql(_MINHASH_SETS_SPARK))
     pairs = spark.sql(_NGRAM_SETS_TAIL_SPARK).select("doc_a", "doc_b")
     dupes = (
         connected_components(pairs, src="doc_a", dst="doc_b")
@@ -1041,7 +1019,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    _materialize_view(spark.sql(_MINHASH_SETS_SPARK), "ng_sets")
+    stage(spark, "ng_sets", spark.sql(_MINHASH_SETS_SPARK))
     pairs = spark.sql(_NGRAM_SETS_TAIL_SPARK).select("doc_a", "doc_b")
     return connected_components(pairs, src="doc_a", dst="doc_b").select(
         F.col("node").alias("doc_id"), "component"
@@ -1178,7 +1156,7 @@ def semdedup_cluster_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     three times).
     """
     load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    _materialize_view(spark.sql(_SD_ASSIGN_SPARK), "sd_asn")
+    stage(spark, "sd_asn", spark.sql(_SD_ASSIGN_SPARK))
     return spark.sql(_SD_TAIL_SPARK)
 
 
@@ -1267,8 +1245,8 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged. Both read the one materialized per-doc set relation.
     """
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    _materialize_view(spark.sql(_MINHASH_SETS_SPARK), "mh_sets")
-    _materialize_view(spark.sql(_LSH_EVAL_SPARK_TRUTH), "truth_pairs")
+    stage(spark, "mh_sets", spark.sql(_MINHASH_SETS_SPARK))
+    stage(spark, "truth_pairs", spark.sql(_LSH_EVAL_SPARK_TRUTH))
     spark.sql(_MINHASH_TAIL_SPARK).createOrReplaceTempView("lsh_pairs")
     return spark.sql(_LSH_EVAL_TAIL_SPARK)
 
@@ -1393,7 +1371,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (signature, probe, and verify stages read it).
     """
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    _materialize_view(spark.sql(_MINHASH_SETS_SPARK), "inc_sets")
+    stage(spark, "inc_sets", spark.sql(_MINHASH_SETS_SPARK))
     return spark.sql(_INC_TAIL_SPARK)
 
 
@@ -1479,7 +1457,7 @@ WHERE CAST(isect AS DOUBLE) / least(na, nb) >= {_CONTAIN_THRESHOLD}
 def dedup_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shingle-containment pairs ≥ 0.8 with the jaccard contrast column."""
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    _materialize_view(spark.sql(_MINHASH_SETS_SPARK), "ct_sets")
+    stage(spark, "ct_sets", spark.sql(_MINHASH_SETS_SPARK))
     return spark.sql(_CONTAIN_SETS_TAIL_SPARK)
 
 
@@ -1621,7 +1599,7 @@ ORDER BY doc_a
 def dedup_minhash_estimate_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Signature-agreement jaccard estimates vs exact, per sampled pair."""
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    _materialize_view(spark.sql(_MINHASH_SETS_SPARK), "est_sets")
+    stage(spark, "est_sets", spark.sql(_MINHASH_SETS_SPARK))
     return spark.sql(_MH_EST_SETS_TAIL_SPARK)
 
 
@@ -1803,8 +1781,8 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     verification of the prefiltered survivors.
     """
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    _materialize_view(spark.sql(_SETS_SHS_ONLY_SPARK), "pf_sets")
-    _materialize_view(spark.sql(_PF_H_SPARK), "pf_h")
+    stage(spark, "pf_sets", spark.sql(_SETS_SHS_ONLY_SPARK))
+    stage(spark, "pf_h", spark.sql(_PF_H_SPARK))
     return spark.sql(_PF_TAIL_SPARK)
 
 

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from automated_data_pipeline_python_spark import quality as Q
-from automated_data_pipeline_python_spark.queries.catalog import register
+from automated_data_pipeline_python_spark.queries.catalog import register, stage
 from automated_data_pipeline_python_spark.tables import load
 
 
@@ -163,15 +163,12 @@ def _profile_unpivot_sql() -> str:
 def profile_orders_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-scan column profile of the orders table (long form).
 
-    The one-row wide aggregate is materialized before the unpivot —
-    Spark inlines CTEs, so the 5 UNION ALL branches would otherwise
-    each re-run the whole aggregation scan (5 corpus passes for a
-    5-column profile).
+    The one-row wide aggregate is staged before the unpivot — the 5
+    UNION ALL branches would otherwise each re-run the whole aggregation
+    scan (5 corpus passes for a 5-column profile).
     """
     load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    spark.sql(_profile_wide_sql(lambda e: e)).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("profile_wide")
+    stage(spark, "profile_wide", spark.sql(_profile_wide_sql(lambda e: e)))
     return spark.sql(_profile_unpivot_sql())
 
 
@@ -244,17 +241,15 @@ def dq_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     max/avg ratio) for the fact-table keys.
 
     Each key column's count relation feeds both the moment stats and
-    the top-10 rollup; Spark inlines CTEs, so each is materialized once
-    via localCheckpoint (one fact-table scan per key column, not two).
+    the top-10 rollup, so each is staged once (one fact-table scan per
+    key column, not two).
     """
     load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     branches = []
     for i, (table, col) in enumerate(_SKEW_COLS):
         view = f"skew_counts_{i}"
-        spark.sql(_skew_counts_sql(table, col)).localCheckpoint(
-            eager=True
-        ).createOrReplaceTempView(view)
+        stage(spark, view, spark.sql(_skew_counts_sql(table, col)))
         branches.append(_skew_branch_sql(table, col, view))
     return spark.sql("\nUNION ALL\n".join(branches))
 
@@ -565,15 +560,12 @@ def dq_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     group's priority distribution and the global one, with the t<=0.2
     release gate.
 
-    The (QI group x priority) cell relation feeds four consumers; Spark
-    inlines CTEs, so it is materialized once via localCheckpoint
-    (DuckDB materializes shared CTEs itself — single-statement oracle).
+    The (QI group x priority) cell relation feeds four consumers, so it
+    is staged once (single-statement oracle).
     """
     load(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    spark.sql(_TCLOSE_CELL).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("tc_cell")
+    stage(spark, "tc_cell", spark.sql(_TCLOSE_CELL))
     return spark.sql("WITH " + _tclose_tail("tc_cell").lstrip())
 
 

@@ -16,12 +16,11 @@ dependency silently changes. Three oracle-checked monitors:
   decile buckets — the standard production drift alarm.
 
 Shape discipline: every multiply-referenced reduced relation (token
-marginals, joint counts, decile cutpoints) is materialized ONCE via
-``localCheckpoint`` + temp view on the Spark side — Spark inlines
-CTEs, so the WITH form would re-run the corpus scan per reference.
-The DuckDB oracles keep the plain WITH form (same values; oracle cost
-is irrelevant). ln() runs on identical rationals in both engines and
-every derived double snaps to the 1e-6 grid before any compare.
+marginals, joint counts, decile cutpoints) is staged ONCE
+(``catalog.stage``) on the Spark side. The DuckDB oracles keep the
+plain WITH form (same values; oracle cost is irrelevant). ln() runs on
+identical rationals in both engines and every derived double snaps to
+the 1e-6 grid before any compare.
 """
 
 from __future__ import annotations
@@ -32,15 +31,11 @@ from automated_data_pipeline_python_spark.functions.text import (
     DUCK_TOKENS,
     SPARK_TOKENS,
 )
-from automated_data_pipeline_python_spark.queries.catalog import register
+from automated_data_pipeline_python_spark.queries.catalog import register, stage
 from automated_data_pipeline_python_spark.tables import load, load_scaled
 
 _S_TOK = SPARK_TOKENS.format(col="text")
 _D_TOK = DUCK_TOKENS.format(col="text")
-
-
-def _materialize_view(df: DataFrame, name: str) -> None:
-    df.localCheckpoint(eager=True).createOrReplaceTempView(name)
 
 
 # ---------------------------------------------------------------------------
@@ -86,13 +81,14 @@ _KL_DUCK_SQL = (
 def corpus_source_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KL(P_source || P_corpus) over token distributions, per source."""
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    _materialize_view(
+    stage(
+        spark,
+        "kl_per_source",
         spark.sql(
             "SELECT source, tok AS term, count(*) AS c FROM "
             f"(SELECT source, explode({_S_TOK}) AS tok FROM documents) "
             "GROUP BY source, tok"
         ),
-        "kl_per_source",
     )
     return spark.sql(_KL_TAIL.format(rel="kl_per_source"))
 
@@ -241,7 +237,7 @@ def dq_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     rels = []
     for i, (t, x, y) in enumerate(_MI_PAIRS):
         view = f"mi_joint_{i}"
-        _materialize_view(spark.sql(_mi_joint_sql(t, x, y)), view)
+        stage(spark, view, spark.sql(_mi_joint_sql(t, x, y)))
         rels.append(view)
     return spark.sql(_mi_spark_sql(rels))
 
@@ -338,11 +334,12 @@ def events_psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .replace("{us_since_t0}", "timestampdiff(MICROSECOND, b.t0, ts)")
         .replace("{us_span}", "timestampdiff(MICROSECOND, b.t0, b.t1)")
     )
-    _materialize_view(
+    stage(
+        spark,
+        "psi_cells",
         spark.sql(
             _PSI_CELLS.replace("{valued}", valued).replace("{q}", "percentile")
         ),
-        "psi_cells",
     )
     spine = "SELECT explode(sequence(0, 9)) AS bucket"
     return spark.sql(_PSI_TAIL.format(spine=spine, cells="psi_cells"))
@@ -400,13 +397,14 @@ _JS_DUCK_SQL = (
 def corpus_source_js_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise JS divergence between source token distributions."""
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    _materialize_view(
+    stage(
+        spark,
+        "js_per_source",
         spark.sql(
             "SELECT source, tok AS term, CAST(count(*) AS DOUBLE) AS c FROM "
             f"(SELECT source, explode({_S_TOK}) AS tok FROM documents) "
             "GROUP BY source, tok"
         ),
-        "js_per_source",
     )
     return spark.sql(_JS_TAIL.replace("{rel}", "js_per_source"))
 
@@ -447,13 +445,14 @@ _SIMPSON_DUCK_SQL = (
 def corpus_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Simpson index and effective vocabulary size per source."""
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    _materialize_view(
+    stage(
+        spark,
+        "simpson_per_source",
         spark.sql(
             "SELECT source, tok AS term, CAST(count(*) AS DOUBLE) AS c FROM "
             f"(SELECT source, explode({_S_TOK}) AS tok FROM documents) "
             "GROUP BY source, tok"
         ),
-        "simpson_per_source",
     )
     return spark.sql(_SIMPSON_TAIL.replace("{rel}", "simpson_per_source"))
 
@@ -528,7 +527,7 @@ def dq_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     rels = []
     for i, (t, x, y) in enumerate(_MI_PAIRS):
         view = f"chi2_joint_{i}"
-        _materialize_view(spark.sql(_mi_joint_sql(t, x, y)), view)
+        stage(spark, view, spark.sql(_mi_joint_sql(t, x, y)))
         rels.append(view)
     return spark.sql(_chi2_sql(rels))
 
@@ -1040,12 +1039,13 @@ def corpus_source_hellinger_tv(spark: SparkSession, sf_dir: str) -> DataFrame:
     token distributions — the metric companions to the JS matrix, off
     the same shared-vocabulary decomposition."""
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    _materialize_view(
+    stage(
+        spark,
+        "hell_per_source",
         spark.sql(
             "SELECT source, tok AS term, CAST(count(*) AS DOUBLE) AS c FROM "
             f"(SELECT source, explode({_S_TOK}) AS tok FROM documents) "
             "GROUP BY source, tok"
         ),
-        "hell_per_source",
     )
     return spark.sql(_HELL_TAIL.replace("{rel}", "hell_per_source"))

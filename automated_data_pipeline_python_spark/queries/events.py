@@ -20,7 +20,7 @@ from automated_data_pipeline_python_spark.functions.numeric import (
     sql_exact_sum,
     stable_round,
 )
-from automated_data_pipeline_python_spark.queries.catalog import register
+from automated_data_pipeline_python_spark.queries.catalog import register, stage
 from automated_data_pipeline_python_spark.tables import load
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
@@ -1122,9 +1122,7 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the event-type Markov chain (uniform start, snapped-grid
     iterates, pi2→pi3 delta as the convergence gauge)."""
     load(spark, sf_dir, "events").createOrReplaceTempView("events")
-    spark.sql(_MKV_MAT_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "mkv_mat"
-    )
+    stage(spark, "mkv_mat", spark.sql(_MKV_MAT_SQL))
     return spark.sql("WITH " + _mkv_tail("mkv_mat").lstrip())
 
 
@@ -1325,7 +1323,5 @@ def events_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     entropy (nats) and its stationary-weighted contribution — the
     journey-predictability drift gauge."""
     load(spark, sf_dir, "events").createOrReplaceTempView("events")
-    spark.sql(_MKV_MAT_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "mkv_mat"
-    )
+    stage(spark, "mkv_mat", spark.sql(_MKV_MAT_SQL))
     return spark.sql("WITH " + _entropy_rate_sql("mkv_mat").lstrip())

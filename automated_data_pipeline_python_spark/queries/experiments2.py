@@ -36,7 +36,7 @@ from automated_data_pipeline_python_spark.functions.text import (
     duck_hash28,
     spark_hash28,
 )
-from automated_data_pipeline_python_spark.queries.catalog import register
+from automated_data_pipeline_python_spark.queries.catalog import register, stage
 from automated_data_pipeline_python_spark.tables import load
 
 # ---------------------------------------------------------------------------
@@ -130,13 +130,10 @@ def events_ucb_bandit_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Offline UCB1 replay: the arm a UCB1 policy would pull each day.
 
     The bounded days×arms daily relation feeds the spine (twice), the
-    fill join, and the cumulative windows; Spark inlines CTEs — four
-    corpus scans at 100 TB — so it is materialized once via
-    localCheckpoint (DuckDB materializes shared CTEs itself)."""
+    fill join, and the cumulative windows — four corpus scans at 100 TB
+    if inlined — so it is staged once."""
     load(spark, sf_dir, "events").createOrReplaceTempView("events")
-    spark.sql(_UCB_DAILY_SQL).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("ucb_daily")
+    stage(spark, "ucb_daily", spark.sql(_UCB_DAILY_SQL))
     return spark.sql(_ucb_tail("date_format(d, 'yyyy-MM-dd')", "ucb_daily"))
 
 
@@ -272,13 +269,10 @@ ORDER BY lag_days
 def events_crosscorr_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Click→purchase daily-series cross-correlation at lags −3..+3.
 
-    The bounded daily relation is joined to itself per lag; Spark
-    inlines CTEs — two corpus scans — so it is materialized once via
-    localCheckpoint (DuckDB materializes shared CTEs itself)."""
+    The bounded daily relation is joined to itself per lag — two corpus
+    scans if inlined — so it is staged once."""
     load(spark, sf_dir, "events").createOrReplaceTempView("events")
-    spark.sql(_XCORR_DAILY_SQL).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("xc_daily")
+    stage(spark, "xc_daily", spark.sql(_XCORR_DAILY_SQL))
     return spark.sql(
         _xcorr_tail(
             "CAST(datediff(d, DATE '1970-01-01') AS BIGINT)", "xc_daily"

@@ -23,7 +23,7 @@ from automated_data_pipeline_python_spark.functions.numeric import (
     sql_exact_sum,
     sql_stable_round,
 )
-from automated_data_pipeline_python_spark.queries.catalog import register
+from automated_data_pipeline_python_spark.queries.catalog import register, stage
 from automated_data_pipeline_python_spark.session import recursion_limits
 from automated_data_pipeline_python_spark.tables import load
 
@@ -103,15 +103,12 @@ def graph_brand_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (2 damped iterations) over the brand co-purchase graph.
 
     The edge list feeds four pipeline stages (out-weights, two
-    contribution rounds, degrees); Spark inlines CTEs, so it is
-    materialized once via localCheckpoint (DuckDB materializes shared
-    CTEs itself — single-statement oracle).
+    contribution rounds, degrees), so it is staged once
+    (single-statement oracle).
     """
     load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     load(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(_EDGES_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "pr_edges"
-    )
+    stage(spark, "pr_edges", spark.sql(_EDGES_SQL))
     return spark.sql(_pagerank_tail("pr_edges"))
 
 
@@ -174,9 +171,7 @@ def graph_brand_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-brand triangle count and local clustering coefficient."""
     load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     load(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(_EDGES_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "tri_edges"
-    )
+    stage(spark, "tri_edges", spark.sql(_EDGES_SQL))
     return spark.sql(_triangles_tail("tri_edges"))
 
 
@@ -225,9 +220,7 @@ def graph_brand_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Min-hop reachability from the first brand, depth <= 3."""
     load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     load(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(_EDGES_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "reach_edges"
-    )
+    stage(spark, "reach_edges", spark.sql(_EDGES_SQL))
     with recursion_limits(spark):
         return spark.sql(
             "WITH RECURSIVE " + _reach_tail("reach_edges").lstrip()
@@ -364,9 +357,7 @@ def graph_weighted_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     load(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(_EDGES_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "sssp_edges"
-    )
+    stage(spark, "sssp_edges", spark.sql(_EDGES_SQL))
     return spark.sql("WITH " + _sssp_tail("sssp_edges").lstrip())
 
 
@@ -446,14 +437,11 @@ _TEXTRANK_DUCK = (
 def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 TextRank keywords over the word co-occurrence graph.
 
-    The edge list feeds four tail stages; Spark inlines CTEs, so it is
-    materialized once via localCheckpoint (DuckDB materializes shared
-    CTEs itself — single-statement oracle).
+    The edge list feeds four tail stages, so it is staged once
+    (single-statement oracle).
     """
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(_TR_EDGES_SPARK).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("tr_edges")
+    stage(spark, "tr_edges", spark.sql(_TR_EDGES_SPARK))
     return spark.sql(
         _pagerank_tail("tr_edges", node="word", suffix=_TR_SUFFIX)
     )
@@ -530,13 +518,11 @@ def graph_brand_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-round k-core peel (k=3) of the mutual-top-5 brand graph.
 
     The mutual graph feeds every peel round; the base edge list is
-    materialized once via localCheckpoint against CTE inlining.
+    staged once.
     """
     load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     load(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(_EDGES_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "kcore_edges"
-    )
+    stage(spark, "kcore_edges", spark.sql(_EDGES_SQL))
     return spark.sql(_KCORE_SQL.format(edges="kcore_edges"))
 
 
@@ -607,14 +593,12 @@ def graph_brand_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     digraph: per-brand authority and hub scores, L2-normalized each
     round with the power-iteration float discipline.
 
-    The edge relation feeds three matrix-product stages; Spark inlines
-    CTEs, so it is materialized once via localCheckpoint.
+    The edge relation feeds three matrix-product stages, so it is
+    staged once.
     """
     load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     load(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(_EDGES_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "hits_edges"
-    )
+    stage(spark, "hits_edges", spark.sql(_EDGES_SQL))
     return spark.sql("WITH " + _hits_tail("hits_edges").lstrip())
 
 
@@ -676,9 +660,7 @@ def graph_brand_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     weights, two snapped divisions per community."""
     load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     load(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(_EDGES_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "mod_edges"
-    )
+    stage(spark, "mod_edges", spark.sql(_EDGES_SQL))
     return spark.sql("WITH " + _modularity_tail("mod_edges").lstrip())
 
 
@@ -696,8 +678,8 @@ def graph_brand_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Scale: each round is one join edges->labels (hash-partitioned on the
 # node key), one (node, label) weight aggregation, one PARTITIONED
-# row_number — work O(edges) per round. The edge list is materialized
-# once (three consumers; Spark inlines CTEs).
+# row_number — work O(edges) per round. The edge list is staged once
+# (three consumers).
 
 
 def _lp_round(edges: str, labels: str, out: str) -> str:
@@ -741,9 +723,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (argmax incident weight, lexicographic tiebreak)."""
     load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     load(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(_EDGES_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "lp_edges"
-    )
+    stage(spark, "lp_edges", spark.sql(_EDGES_SQL))
     return spark.sql("WITH " + _lp_tail("lp_edges").lstrip())
 
 
@@ -821,9 +801,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     moment sums, one snapped Pearson expression."""
     load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     load(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(_EDGES_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "assort_edges"
-    )
+    stage(spark, "assort_edges", spark.sql(_EDGES_SQL))
     return spark.sql("WITH " + _assort_tail("assort_edges").lstrip())
 
 
@@ -894,9 +872,7 @@ def graph_closeness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     load(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(_EDGES_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "close_edges"
-    )
+    stage(spark, "close_edges", spark.sql(_EDGES_SQL))
     return spark.sql("WITH e AS (SELECT * FROM close_edges),\n" + _CLOSE_TAIL.lstrip())
 
 
@@ -965,9 +941,7 @@ def graph_brand_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     load(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(_EDGES_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "truss_edges"
-    )
+    stage(spark, "truss_edges", spark.sql(_EDGES_SQL))
     return spark.sql(
         "WITH e AS (SELECT * FROM truss_edges),\n" + _TRUSS_TAIL.lstrip()
     )
@@ -1042,7 +1016,5 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     related brands by walk proximity."""
     load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     load(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(_EDGES_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "ppr_edges"
-    )
+    stage(spark, "ppr_edges", spark.sql(_EDGES_SQL))
     return spark.sql(_ppr_tail("ppr_edges"))

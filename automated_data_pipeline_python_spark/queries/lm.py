@@ -37,13 +37,8 @@ from automated_data_pipeline_python_spark.functions.text import (
     spark_hash60,
     spark_word_shingles,
 )
-from automated_data_pipeline_python_spark.queries.catalog import register
-from automated_data_pipeline_python_spark.tables import load_scaled
-
-def _docs_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(sql)
-
+from automated_data_pipeline_python_spark.queries.catalog import register, stage
+from automated_data_pipeline_python_spark.tables import load_scaled, scaled_sql
 
 # ---------------------------------------------------------------------------
 # Exact-substring duplication via rolling token windows
@@ -117,10 +112,9 @@ def dedup_substring_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     and drop out on both engines identically.
 
     The window relation is referenced twice (per-hash doc counts, then
-    the per-doc rollup); Spark inlines CTEs, so it is materialized via
-    localCheckpoint — otherwise the dominant shingle+SHA stage runs
-    twice (DuckDB materializes shared CTEs on its own; the oracle keeps
-    the single-statement form).
+    the per-doc rollup), so it is staged — otherwise the dominant
+    shingle+SHA stage runs twice (the oracle keeps the single-statement
+    form).
     """
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
     w = spark.sql(
@@ -130,7 +124,7 @@ def dedup_substring_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             " LATERAL VIEW explode(sh) t AS s",
         )
     )
-    w.localCheckpoint(eager=True).createOrReplaceTempView("ssw_w")
+    stage(spark, "ssw_w", w)
     return spark.sql(_substring_tail_sql("ssw_w"))
 
 
@@ -196,7 +190,7 @@ _BIGRAM_DUCK_SQL = _bigram_sql(
 @register("lm_bigram_entropy", oracle=_BIGRAM_DUCK_SQL)
 def lm_bigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-50 bigram prefixes by frequency with conditional entropy."""
-    return _docs_sql(spark, sf_dir, _BIGRAM_SPARK_SQL)
+    return scaled_sql(spark, sf_dir, "documents", _BIGRAM_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -258,7 +252,7 @@ _BPE_DUCK_SQL = _bpe_sql(
 @register("bpe_pair_merge_counts", oracle=_BPE_DUCK_SQL)
 def bpe_pair_merge_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 BPE merge candidates: char-pair counts weighted by word freq."""
-    return _docs_sql(spark, sf_dir, _BPE_SPARK_SQL)
+    return scaled_sql(spark, sf_dir, "documents", _BPE_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -334,7 +328,7 @@ _ZIPF_DUCK_SQL = _zipf_sql(
 @register("text_zipf_slope", oracle=_ZIPF_DUCK_SQL)
 def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Least-squares log-log slope of the top-200 term-frequency ranks."""
-    return _docs_sql(spark, sf_dir, _ZIPF_SPARK_SQL)
+    return scaled_sql(spark, sf_dir, "documents", _ZIPF_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -350,9 +344,8 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a fixed-size broadcast (the invariant-sanctioned broadcast class —
 # it does NOT grow with the corpus).
 #
-# Spark side: the doc-token distinct relation is materialized
-# (localCheckpoint) because the pair join references it twice and
-# Spark inlines CTEs; DuckDB materializes shared CTEs on its own.
+# Spark side: the doc-token distinct relation is staged because the
+# pair join references it twice.
 # All counts are integers; the single ln() is a deterministic function
 # of exact inputs, snapped to the 1e-6 grid before the ORDER BY.
 
@@ -414,7 +407,7 @@ def text_token_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         " FROM (SELECT doc_id, regexp_extract_all(text, '[a-z]+', 0) AS ws"
         "       FROM documents) LATERAL VIEW explode(ws) t AS w"
     )
-    dt.localCheckpoint(eager=True).createOrReplaceTempView("pmi_dt")
+    stage(spark, "pmi_dt", dt)
     return spark.sql(_pmi_tail_sql("pmi_dt"))
 
 
@@ -438,10 +431,9 @@ def text_token_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (vocabulary²-bounded, map-side combinable) + one broadcast of a
 # single merge row into a map-only rewrite — 3 unrolled rounds = 3
 # corpus scans, the inherent cost of BPE. On the Spark side each
-# round's corpus is materialized (localCheckpoint): round N+1
-# references round N twice (count + rewrite), so CTE inlining would
-# re-run the whole prefix exponentially. DuckDB materializes CTEs on
-# its own; the oracle keeps the single WITH chain.
+# round's corpus is staged: round N+1 references round N twice
+# (count + rewrite), so inlining would re-run the whole prefix
+# exponentially. The oracle keeps the single WITH chain.
 
 _BPE_ROUNDS = 3
 _BPE_JOIN = "¤"  # fuse marker; never appears in whitespace tokens
@@ -523,8 +515,7 @@ def bpe_train_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Greedy-left merge via two plain-replace passes (exact: skipped
     occurrences are never adjacent); deterministic argmax by
-    (count, left, right). Spark materializes each round's corpus
-    against CTE-inlining re-execution.
+    (count, left, right). Spark stages each round's corpus.
     """
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
     # Unroll with per-round materialization: build each round's corpus
@@ -536,13 +527,13 @@ def bpe_train_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         "LATERAL VIEW explode(CASE WHEN size(a) >= 2 THEN "
         "sequence(1, size(a) - 1) ELSE array() END) t AS i"
     )
-    spark.sql(
+    stage(spark, "bpe_corpus0", spark.sql(
         """
         SELECT doc_id,
                concat_ws(' ', split(trim(lower(text)), '\\\\s+')) AS s
         FROM documents WHERE length(trim(text)) > 0
         """
-    ).localCheckpoint(eager=True).createOrReplaceTempView("bpe_corpus0")
+    ))
     picks = []
     for n in range(_BPE_ROUNDS):
         body = _bpe_round(n, elem, guard).format(split=split)
@@ -552,9 +543,7 @@ def bpe_train_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         nxt = spark.sql(
             sql + f"\nSELECT doc_id, s FROM corpus{n + 1}"
         )
-        nxt.localCheckpoint(eager=True).createOrReplaceTempView(
-            f"bpe_corpus{n + 1}"
-        )
+        stage(spark, f"bpe_corpus{n + 1}", nxt)
         picks.append(
             sql
             + f"\nSELECT {n + 1} AS round, l AS merge_left,"
@@ -591,8 +580,7 @@ def bpe_train_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale: the corpus-sized pass is the bigram count (map-side
 # combinable); the three marginals re-aggregate only the bigram VOCAB
 # (Zipf-bounded, corpus-sublinear) and join back on the vocab keys.
-# Spark inlines CTEs, so the bigram-type table — read by four
-# consumers — is materialized once via localCheckpoint.
+# The bigram-type table — read by four consumers — is staged once.
 
 _KN_D = "0.75e0"
 _KN_TOP = 30
@@ -657,16 +645,16 @@ def lm_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     discounted MLE + continuation-probability backoff (D = 0.75).
 
     The bigram-type table feeds four consumers (prefix marginal,
-    continuation marginal, type total, final select); Spark inlines
-    CTEs, so it is materialized once via localCheckpoint.
+    continuation marginal, type total, final select), so it is staged
+    once.
     """
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(
+    stage(spark, "kn_big", spark.sql(
         _kn_big_sql(
             spark_word_shingles(SPARK_TOKENS.format(col="text"), 2),
             " LATERAL VIEW explode(sh) t AS s",
         )
-    ).localCheckpoint(eager=True).createOrReplaceTempView("kn_big")
+    ))
     return spark.sql("WITH " + _kn_tail("kn_big").lstrip())
 
 
@@ -749,7 +737,7 @@ def lm_heldout_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     read by both the train and eval sides.
     """
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(
+    stage(spark, "ppl_bg", spark.sql(
         f"""
         SELECT doc_id, source, s AS bigram
         FROM (SELECT doc_id, source,
@@ -757,7 +745,7 @@ def lm_heldout_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
                          AS sh
               FROM documents) LATERAL VIEW explode(sh) t AS s
         """
-    ).localCheckpoint(eager=True).createOrReplaceTempView("ppl_bg")
+    ))
     return spark.sql("WITH " + _ppl_tail("ppl_bg").lstrip())
 
 
@@ -834,13 +822,13 @@ def bpe_compression_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "LATERAL VIEW explode(CASE WHEN size(a) >= 1 THEN "
         "sequence(1, size(a)) ELSE array() END) t AS i"
     )
-    spark.sql(
+    stage(spark, "bpc_corpus0", spark.sql(
         f"""
         SELECT doc_id,
                concat_ws(' ', split(trim(lower(text)), '\\\\s+')) AS s
         FROM documents WHERE length(trim(text)) > 0
         """
-    ).localCheckpoint(eager=True).createOrReplaceTempView("bpc_corpus0")
+    ))
     stats = []
     for n in range(_BPE_ROUNDS + 1):
         sql = "WITH corpus%d AS (SELECT * FROM bpc_corpus%d)" % (n, n)
@@ -849,9 +837,7 @@ def bpe_compression_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             nxt = spark.sql(
                 sql + "," + body + f"\nSELECT doc_id, s FROM corpus{n + 1}"
             )
-            nxt.localCheckpoint(eager=True).createOrReplaceTempView(
-                f"bpc_corpus{n + 1}"
-            )
+            stage(spark, f"bpc_corpus{n + 1}", nxt)
         stats.append(
             "SELECT * FROM ("
             + sql
@@ -944,13 +930,11 @@ _LLR_DUCK_SQL = (
 def text_token_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-30 Dunning G² collocations over adjacent token bigrams.
 
-    The bigram relation feeds three marginal aggregations; Spark
-    inlines CTEs, so it is materialized once via localCheckpoint.
+    The bigram relation feeds three marginal aggregations, so it is
+    staged once.
     """
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(_LLR_PAIRS_SPARK).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("llr_bigr")
+    stage(spark, "llr_bigr", spark.sql(_LLR_PAIRS_SPARK))
     return spark.sql("WITH " + _llr_tail("llr_bigr").lstrip())
 
 
@@ -1228,7 +1212,7 @@ def lm_unigram_em_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     word (see the module comment for the exact-equality argument vs the
     oracle's exhaustive recursive enumeration). The corpus-pass outputs
     (distinct words, snapped-cost vocab) are each referenced twice, so
-    they are materialized once via localCheckpoint; everything after
+    they are staged once; everything after
     runs on vocabulary-bounded relations in one job.
     """
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
@@ -1240,11 +1224,10 @@ def lm_unigram_em_round(spark: SparkSession, sf_dir: str) -> DataFrame:
         "FROM documents),"
         + prefix.lstrip()
     )
-    spark.sql(head + "\nSELECT w, wf FROM words").localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("uem_words")
-    spark.sql(head + f",\nvc AS ({_UNIGRAM_VC})\nSELECT * FROM vc"
-              ).localCheckpoint(eager=True).createOrReplaceTempView("uem_vc")
+    stage(spark, "uem_words", spark.sql(head + "\nSELECT w, wf FROM words"))
+    stage(
+        spark, "uem_vc", spark.sql(head + f",\nvc AS ({_UNIGRAM_VC})\nSELECT * FROM vc")
+    )
     body = (
         "WITH "
         + _unigram_em_spark_best("uem_words", "uem_vc").lstrip()
@@ -1316,7 +1299,7 @@ def lm_negative_sampling_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-40 rows of the unigram^0.75 negative-sampling table with
     cumulative inverse-CDF boundaries — the skip-gram/contrastive
     trainer's sampling distribution, built exactly."""
-    return _docs_sql(spark, sf_dir, _NEG_SPARK_SQL)
+    return scaled_sql(spark, sf_dir, "documents", _NEG_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1337,10 +1320,9 @@ def lm_negative_sampling_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (pinned in tests/test_lm_bounds.py).
 #
 # Scale note (Spark): each bp level is referenced by up to 4 later
-# levels and the final union; Spark inlines CTEs, so each level is
-# materialized via localCheckpoint (12 tiny vocab-bounded relations) —
-# the same discipline as the unrolled k-means/PageRank rounds. DuckDB
-# materializes shared CTEs itself, so the oracle is one statement.
+# levels and the final union, so each level is staged (12 tiny
+# vocab-bounded relations) — the same discipline as the unrolled
+# k-means/PageRank rounds. The oracle is one statement.
 
 _VIT_MAXLEN = 12
 
@@ -1422,19 +1404,15 @@ def lm_viterbi_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "FROM documents),"
         + prefix.lstrip()
     )
-    spark.sql(head + "\nSELECT w, wf FROM words").localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("vit_words")
-    spark.sql(head + "\n" + _VIT_PC_TAIL).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("vit_pc")
+    stage(spark, "vit_words", spark.sql(head + "\nSELECT w, wf FROM words"))
+    stage(spark, "vit_pc", spark.sql(head + "\n" + _VIT_PC_TAIL))
     spark.sql(
         "SELECT w, wf, 0e0 AS cost FROM vit_words"
     ).createOrReplaceTempView("vit_bp0")
     for p in range(1, _VIT_MAXLEN + 1):
-        spark.sql(
+        stage(spark, f"vit_bp{p}", spark.sql(
             _vit_level_sql(p, "vit_bp", "vit_pc")
-        ).localCheckpoint(eager=True).createOrReplaceTempView(f"vit_bp{p}")
+        ))
     return spark.sql(_vit_done_sql("vit_bp"))
 
 
@@ -1555,10 +1533,8 @@ def lm_wordpiece_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
         "FROM documents),"
         + prefix.lstrip()
     )
-    spark.sql(head + "\nSELECT w, wf FROM words").localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("wp_words")
-    spark.sql(
+    stage(spark, "wp_words", spark.sql(head + "\nSELECT w, wf FROM words"))
+    stage(spark, "wp_vocab", spark.sql(
         head + "\nSELECT piece, CAST(len AS INT) AS len FROM vocab"
-    ).localCheckpoint(eager=True).createOrReplaceTempView("wp_vocab")
+    ))
     return spark.sql("WITH " + _WP_SPARK_TAIL.lstrip())

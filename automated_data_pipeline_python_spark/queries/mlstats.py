@@ -31,7 +31,7 @@ from automated_data_pipeline_python_spark.functions.text import (
     duck_hash60,
     spark_hash60,
 )
-from automated_data_pipeline_python_spark.queries.catalog import register
+from automated_data_pipeline_python_spark.queries.catalog import register, stage
 from automated_data_pipeline_python_spark.queries.curation2 import (
     _CALIB_DUCK_SQL,
     _CALIB_SPARK_SQL,
@@ -60,7 +60,7 @@ from automated_data_pipeline_python_spark.tables import load, load_scaled
 # Scale: the corpus-sized work is the bin construction (inherited from
 # quality_calibration_bins: one featurize pass + bounded score
 # histogram); everything here runs on <=10 rows. The bins relation
-# feeds five consumers; Spark inlines CTEs, so it is materialized.
+# feeds five consumers, so it is staged.
 
 
 def _iso_tail(bins: str) -> str:
@@ -115,15 +115,14 @@ def quality_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     via the exact minimax identity — the monotone recalibration of
     quality_calibration_bins' reliability curve.
 
-    The bounded bin relation feeds five consumers; Spark inlines CTEs,
-    so it is materialized once via localCheckpoint.
+    The bounded bin relation feeds five consumers, so it is staged once.
     """
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(
+    stage(spark, "iso_bins", spark.sql(
         "SELECT decile, n_docs, n_gopher_pass FROM ("
         + _CALIB_SPARK_SQL
         + ") z"
-    ).localCheckpoint(eager=True).createOrReplaceTempView("iso_bins")
+    ))
     return spark.sql("WITH " + _iso_tail("iso_bins").lstrip())
 
 
@@ -144,7 +143,7 @@ def quality_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale: one featurize pass split by doc_id parity, one bounded
 # residual histogram (values bounded by the doc-length range), one
 # test-side coverage aggregation. The scored relation feeds both
-# splits; Spark inlines CTEs, so it is materialized.
+# splits, so it is staged.
 
 _CONF_ALPHA_PCT = 95  # 1 - alpha as integer percent
 
@@ -207,15 +206,14 @@ def quality_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-off) and the resulting test-split empirical coverage vs the
     95% target.
 
-    The residual relation feeds both splits; Spark inlines CTEs, so it
-    is materialized once via localCheckpoint.
+    The residual relation feeds both splits, so it is staged once.
     """
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(
+    stage(spark, "conf_pred", spark.sql(
         _conformal_pred_sql("size(toks)").format(
             tok="split(trim(text), '\\\\s+')"
         )
-    ).localCheckpoint(eager=True).createOrReplaceTempView("conf_pred")
+    ))
     return spark.sql(
         "WITH "
         + _conformal_tail(
@@ -318,12 +316,10 @@ def agg_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     and cross moments read entirely off bounded value histograms.
 
     The projected row relation feeds three joint-histogram
-    aggregations; Spark inlines CTEs, so it is materialized once.
+    aggregations, so it is staged once.
     """
     load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    spark.sql(_SP_ROWS_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "sp_rows"
-    )
+    stage(spark, "sp_rows", spark.sql(_SP_ROWS_SQL))
     return spark.sql("WITH " + _spearman_tail("sp_rows").lstrip())
 
 
@@ -346,8 +342,8 @@ def agg_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Scale: one customer-orders left-join aggregation (hash-keyed), one
 # moment aggregation, one map-only scoring pass, TakeOrdered top-20.
-# The feature relation feeds the moment pass and the scorer; Spark
-# inlines CTEs, so it is materialized.
+# The feature relation feeds the moment pass and the scorer, so it is
+# staged.
 
 _MAHA_FEATS_SQL = """
 SELECT c.c_custkey,
@@ -408,14 +404,12 @@ def dq_mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     (account balance, order count) with the closed-form 2x2 precision
     matrix — the covariance-aware outlier screen.
 
-    The feature relation feeds the moment pass and the scorer; Spark
-    inlines CTEs, so it is materialized once via localCheckpoint.
+    The feature relation feeds the moment pass and the scorer, so it is
+    staged once.
     """
     load(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    spark.sql(_MAHA_FEATS_SQL).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("maha_feats")
+    stage(spark, "maha_feats", spark.sql(_MAHA_FEATS_SQL))
     return spark.sql("WITH " + _maha_tail("maha_feats").lstrip())
 
 
@@ -788,9 +782,7 @@ def er_em_mu_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     field carries no discriminating weight, surfaced rather than
     hidden."""
     load(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(_em_head()).localCheckpoint(eager=True).createOrReplaceTempView(
-        "em_agg"
-    )
+    stage(spark, "em_agg", spark.sql(_em_head()))
     return spark.sql(_em_tail("em_agg"))
 
 
@@ -1468,17 +1460,17 @@ def quality_platt_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-decile calibrated rate alongside the raw rate and the
     fitted (a, b).
 
-    The bounded bin relation feeds every Newton step; Spark inlines
-    CTEs, so it is materialized once via localCheckpoint.
+    The bounded bin relation feeds every Newton step, so it is staged
+    once.
     """
     from automated_data_pipeline_python_spark.tables import load_scaled
 
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(
+    stage(spark, "platt_bins", spark.sql(
         "SELECT decile, n_docs, n_gopher_pass FROM ("
         + _CALIB_SPARK_SQL
         + ") z"
-    ).localCheckpoint(eager=True).createOrReplaceTempView("platt_bins")
+    ))
     return spark.sql("WITH " + _platt_sql("platt_bins").lstrip())
 
 

@@ -24,21 +24,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from automated_data_pipeline_python_spark.queries.catalog import register
-from automated_data_pipeline_python_spark.tables import load, load_scaled
+from automated_data_pipeline_python_spark.queries.catalog import register, stage
+from automated_data_pipeline_python_spark.tables import load_scaled, scaled_sql
 
 _CHUNK = 160  # window (chars)
 _STRIDE = 120  # step (chars) -> 40-char overlap between neighbors
-
-
-def _docs_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(sql)
-
-
-def _emb_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    return spark.sql(sql)
 
 
 # ---------------------------------------------------------------------------
@@ -79,7 +69,7 @@ def chunk_documents_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Map-only (no shuffle at any scale); chunk count scales with corpus
     chars, never quadratically.
     """
-    return _docs_sql(spark, sf_dir, _CHUNK_SPARK_SQL)
+    return scaled_sql(spark, sf_dir, "documents", _CHUNK_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -132,7 +122,7 @@ def chunk_dedup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Share of redundant chunks after overlap-window splitting: one
     hash-agg over chunk text (a 64-bit chunk hash at scale), exact
     integer counts + snapped ratio."""
-    return _docs_sql(spark, sf_dir, _CHUNK_DUP_SPARK_SQL)
+    return scaled_sql(spark, sf_dir, "documents", _CHUNK_DUP_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -173,7 +163,7 @@ GROUP BY 1, 2
 def doc_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-width (width=200) histogram of document lengths with
     per-bucket min/max/avg — integer bucketing, map-side-combined agg."""
-    return _docs_sql(spark, sf_dir, _HIST_SPARK_SQL)
+    return scaled_sql(spark, sf_dir, "documents", _HIST_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -226,7 +216,7 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric per-vector int8 quantization (q = round(x/max|x|*127))
     exploded to scalar rows; double-promoted arithmetic keeps both
     engines bit-identical. Map-only."""
-    return _emb_sql(spark, sf_dir, _QUANT_SPARK_SQL)
+    return scaled_sql(spark, sf_dir, "embeddings", _QUANT_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -245,9 +235,8 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and membership tests are NOT-IN against the <=5-row selected set
 # (planner-forced tiny broadcasts, the q16 exemption class). Relevance
 # and sims snap to the 1e-6 grid BEFORE any compare, so greedy picks
-# are identical cross-engine. Spark materializes the candidate set via
-# localCheckpoint (12 rows) because every step re-references it and
-# Spark inlines CTEs.
+# are identical cross-engine. Spark stages the candidate set (12 rows)
+# because every step re-references it.
 
 _MMR_LAMBDA = "7e-1"
 _MMR_K = 12   # candidate pool (top by relevance)
@@ -345,7 +334,7 @@ def rag_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         + _MMR_CANDS.format(dot=_MMR_DOT_SPARK, k=_MMR_K)
         + "\nSELECT * FROM cands"
     )
-    cands.localCheckpoint(eager=True).createOrReplaceTempView("mmr_cands")
+    stage(spark, "mmr_cands", cands)
     out = spark.sql("WITH " + _mmr_tail("mmr_cands", _MMR_DOT_SPARK))
     spark.catalog.dropTempView("mmr_cands")
     return out

@@ -32,7 +32,7 @@ from automated_data_pipeline_python_spark.functions.text import (
     duck_hash28,
     spark_hash28,
 )
-from automated_data_pipeline_python_spark.queries.catalog import register
+from automated_data_pipeline_python_spark.queries.catalog import register, stage
 from automated_data_pipeline_python_spark.tables import load
 
 _CAPPED_SQL = """
@@ -87,15 +87,12 @@ def reco_item_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-50 item-item cosine-similar part pairs from order history.
 
     The capped interaction set feeds three pipeline stages (item
-    counts, both sides of the pair self-join); Spark inlines CTEs, so
-    it is materialized once via localCheckpoint (DuckDB materializes
-    shared CTEs itself — single-statement oracle).
+    counts, both sides of the pair self-join), so it is staged once
+    (single-statement oracle).
     """
     load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    spark.sql(_CAPPED_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "reco_capped"
-    )
+    stage(spark, "reco_capped", spark.sql(_CAPPED_SQL))
     return spark.sql(_cosine_tail("reco_capped"))
 
 
@@ -125,8 +122,7 @@ def reco_item_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stage aggregates or joins on (u) or (b) keys — no pairs anywhere;
 # brand cardinality is bounded, user cardinality shuffles hash-
 # partitioned. The ratings relation feeds three consumers (u-step,
-# v-step, error pass) and u1 feeds two; Spark inlines CTEs, so both
-# are materialized via localCheckpoint.
+# v-step, error pass) and u1 feeds two, so both are staged.
 
 _ALS_RATINGS_SQL = """
 SELECT o_custkey AS u, p_brand AS b,
@@ -196,18 +192,14 @@ def reco_als_rank1_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantities: per-brand item factor after the u-step/v-step pair,
     with per-brand RMSE as the convergence signal.
 
-    Ratings feed three stages and the user factors two; Spark inlines
-    CTEs, so both are materialized via localCheckpoint.
+    Ratings feed three stages and the user factors two, so both are
+    staged.
     """
     load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     load(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(_ALS_RATINGS_SQL).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("als_ratings")
-    spark.sql(_ALS_UFAC_TPL.format(ratings="als_ratings")).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("als_ufac")
+    stage(spark, "als_ratings", spark.sql(_ALS_RATINGS_SQL))
+    stage(spark, "als_ufac", spark.sql(_ALS_UFAC_TPL.format(ratings="als_ratings")))
     return spark.sql("WITH " + _als_tail("als_ratings", "als_ufac").lstrip())
 
 
@@ -402,9 +394,7 @@ def reco_coverage_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     recommendation-frequency entropy."""
     for t in ("lineitem", "part"):
         load(spark, sf_dir, t).createOrReplaceTempView(t)
-    spark.sql(_RECO_EDGES_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "reco_edges"
-    )
+    stage(spark, "reco_edges", spark.sql(_RECO_EDGES_SQL))
     return spark.sql("WITH " + _reco_div_tail("reco_edges").lstrip())
 
 
@@ -700,15 +690,14 @@ def reco_map_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     and AP@10 under the same time split as the hit-rate eval.
 
     The half-labeled (order, brand) relation feeds both self-joined
-    halves (4 references); Spark inlines CTEs, so it is materialized
-    once via localCheckpoint (DuckDB materializes shared CTEs itself —
-    single-statement oracle)."""
+    halves (4 references), so it is staged once (single-statement
+    oracle)."""
     load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     load(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(
+    stage(spark, "mm_ob", spark.sql(
         _MAP_OB_SQL.format(div=_RECO_EVAL_DIV.format(op="DIV"))
-    ).localCheckpoint(eager=True).createOrReplaceTempView("mm_ob")
+    ))
     return spark.sql(
         "WITH "
         + _MAP_TAIL.format(
@@ -736,10 +725,8 @@ def reco_map_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is brand x brand (bounded); the prediction join fans each held-out
 # cell out over the user's ≤|brands| training items — linear in
 # held-out cells, never user-pairs. The split relation (ratings =
-# orders⋈lineitem⋈part, grouped) feeds train 4x and test 2x; Spark
-# inlines CTEs, so the Spark side materializes it once via
-# localCheckpoint (DuckDB materializes shared CTEs itself —
-# single-statement oracle).
+# orders⋈lineitem⋈part, grouped) feeds train 4x and test 2x, so the
+# Spark side stages it once (single-statement oracle).
 
 
 def _slope_one_split_sql(hash28) -> str:
@@ -820,11 +807,9 @@ def reco_slope_one_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted Slope One offline eval on a deterministic 10% holdout
     of the customer x brand quantity matrix: MAE and coverage — the
     rating-prediction baseline beside the item-item ranker. The rating
-    split materializes once (localCheckpoint) for its six references."""
+    split is staged once for its six references."""
     load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     load(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(_slope_one_split_sql(spark_hash28)).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("so_split")
+    stage(spark, "so_split", spark.sql(_slope_one_split_sql(spark_hash28)))
     return spark.sql(_slope_one_tail_sql("so_split"))

@@ -33,7 +33,7 @@ from automated_data_pipeline_python_spark.functions.numeric import (
     sql_exact_sum,
 )
 from automated_data_pipeline_python_spark.queries.catalog import register
-from automated_data_pipeline_python_spark.tables import load_scaled
+from automated_data_pipeline_python_spark.tables import load_scaled, scaled_sql
 
 _S_TOK = SPARK_TOKENS.format(col="text")
 _D_TOK = DUCK_TOKENS.format(col="text")
@@ -46,16 +46,6 @@ _TERMS_IN = ", ".join(f"'{t}'" for t in _QUERY_TERMS)
 _K1 = 1.2
 _B = 0.75
 _BM25_TOP = 20
-
-
-def _docs_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(sql)
-
-
-def _emb_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    return spark.sql(sql)
 
 
 # ---------------------------------------------------------------------------
@@ -147,7 +137,7 @@ def text_bm25_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats: 1 row) → global top-k (TakeOrderedAndProject). Total order
     via (snapped score DESC, doc_id).
     """
-    return _docs_sql(spark, sf_dir, _BM25_SPARK_SQL)
+    return scaled_sql(spark, sf_dir, "documents", _BM25_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -210,7 +200,7 @@ def text_inverted_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     window partitioned by term with an rn<=8 cut before any list is
     built. A 100 TB hot term costs a rank-scan, never a giant array.
     """
-    return _docs_sql(spark, sf_dir, _POSTINGS_SPARK_SQL)
+    return scaled_sql(spark, sf_dir, "documents", _POSTINGS_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -286,7 +276,7 @@ def embedding_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     final window. Cosines snap to the 1e-6 grid BEFORE ranking and the
     margin subtraction so both engines rank identical values.
     """
-    return _emb_sql(spark, sf_dir, _HARDNEG_SPARK_SQL)
+    return scaled_sql(spark, sf_dir, "embeddings", _HARDNEG_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -560,4 +550,4 @@ def text_ql_dirichlet_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dirichlet-smoothed query-likelihood top-20 for the shared fixed
     query-term set (mu=2000) — the LM ranking next to BM25, with a
     map-only base term and a hits-only adjustment join."""
-    return _docs_sql(spark, sf_dir, _QL_SPARK_SQL)
+    return scaled_sql(spark, sf_dir, "documents", _QL_SPARK_SQL)

@@ -27,25 +27,14 @@ from automated_data_pipeline_python_spark.functions.text import (
     duck_hash60,
     spark_hash60,
 )
-from automated_data_pipeline_python_spark.queries.catalog import register
-from automated_data_pipeline_python_spark.tables import load, load_scaled
+from automated_data_pipeline_python_spark.queries.catalog import register, stage
+from automated_data_pipeline_python_spark.tables import load_scaled, scaled_sql
 
 _DIMS = 64
 _N_PLANES = 3   # 8 buckets per table
 _N_TABLES = 4   # union of candidates across tables (recall knob)
 _N_QUERIES = 5  # query set: vec_id < 5
 _TOP_K = 10
-
-
-def _emb_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    return spark.sql(sql)
-
-
-def _materialize_view(df: DataFrame, name: str) -> None:
-    """Compute once, register for reuse (Spark inlines CTEs — a bucket
-    table referenced twice would run the whole LSH pipeline twice)."""
-    df.localCheckpoint(eager=True).createOrReplaceTempView(name)
 
 
 # ---------------------------------------------------------------------------
@@ -112,7 +101,7 @@ def knn_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Norms come from the shared pre-normed relation (one pass per side),
     not per-pair recomputation.
     """
-    return _emb_sql(spark, sf_dir, _KNN_SPARK_SQL)
+    return scaled_sql(spark, sf_dir, "embeddings", _KNN_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -212,7 +201,7 @@ FROM buckets GROUP BY t, bucket
 @register("ann_lsh_bucket_histogram", oracle=_BUCKETS_CORE_DUCK + _HIST_TAIL_DUCK)
 def ann_lsh_bucket_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hyperplane-LSH signature buckets + occupancy histogram."""
-    return _emb_sql(spark, sf_dir, _BUCKETS_CORE_SPARK + _HIST_TAIL)
+    return scaled_sql(spark, sf_dir, "embeddings", _BUCKETS_CORE_SPARK + _HIST_TAIL)
 
 
 _ANN_TAIL = f"""
@@ -239,9 +228,8 @@ FROM ranked WHERE rnk <= {_TOP_K}
 """
 
 
-# Spark variant reads the materialized bucket view (Spark inlines CTEs,
-# so the single-statement form would run the whole LSH pipeline once per
-# bucket reference).
+# Spark variant reads the staged bucket view (the single-statement form
+# would run the whole LSH pipeline once per bucket reference).
 _ANN_TAIL_SPARK = "WITH " + _ANN_TAIL.format(
     emb_n=_SPARK_EMB_N_CTE, cos=_SPARK_COS, buckets="lsh_buckets"
 ).lstrip()
@@ -261,10 +249,8 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-normed relation (one pass per side). More planes + multiple
     tables trade recall for cost — the plan shape is unchanged.
     """
-    _materialize_view(
-        _emb_sql(spark, sf_dir, _BUCKETS_CORE_SPARK + "SELECT * FROM buckets"),
-        "lsh_buckets",
-    )
+    buckets = _BUCKETS_CORE_SPARK + "SELECT * FROM buckets"
+    stage(spark, "lsh_buckets", scaled_sql(spark, sf_dir, "embeddings", buckets))
     return spark.sql(_ANN_TAIL_SPARK)
 
 
@@ -305,7 +291,7 @@ FROM norms GROUP BY label
 @register("embedding_norm_stats", oracle=_NORM_DUCK_SQL)
 def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label vector norm statistics."""
-    return _emb_sql(spark, sf_dir, _NORM_SPARK_SQL)
+    return scaled_sql(spark, sf_dir, "embeddings", _NORM_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -636,7 +622,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     because assignment is 1:1. Re-rank touches ~nprobe/cells of the
     data per query.
     """
-    return _emb_sql(spark, sf_dir, _IVF_SPARK_SQL)
+    return scaled_sql(spark, sf_dir, "embeddings", _IVF_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -790,7 +776,7 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     is materialized once (codebook, encode, and query stages share it).
     """
     load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    _materialize_view(spark.sql(_PQ_SUB_SPARK), "pq_sub")
+    stage(spark, "pq_sub", spark.sql(_PQ_SUB_SPARK))
     return spark.sql(_PQ_TAIL_SPARK)
 
 
@@ -867,7 +853,7 @@ def ann_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged. Both read the materialized subvector relation.
     """
     load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    _materialize_view(spark.sql(_PQ_SUB_SPARK), "pq_sub")
+    stage(spark, "pq_sub", spark.sql(_PQ_SUB_SPARK))
     spark.sql(_PQ_TAIL_SPARK).createOrReplaceTempView("pq_topk")
     sql = (
         "WITH base AS (SELECT vec_id,"
@@ -956,9 +942,8 @@ exact_topk AS (
     total = _N_QUERIES * _PQ_TOP_K
     # hits is an integer → the recall division is bit-identical across
     # engines; the 1e-6 snap guards only the decimal rendering.
-    # {{base_src}} is filled per engine: DuckDB derives inline (it
-    # materializes multiply-referenced CTEs itself); Spark reads a
-    # localCheckpoint'ed view — every config chain plus the exact truth
+    # {{base_src}} is filled per engine: DuckDB derives inline; Spark
+    # reads a staged view — every config chain plus the exact truth
     # reference base, so inline it would be re-derived ~11x.
     return f"""
 WITH base AS ({{base_src}}),
@@ -1101,10 +1086,10 @@ def ann_pq_tuning_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-derive the cast+scan ~11x across the five chains.
     """
     load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    spark.sql(
+    stage(spark, "pq_sweep_base", spark.sql(
         "SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v"
         " FROM embeddings"
-    ).localCheckpoint(eager=True).createOrReplaceTempView("pq_sweep_base")
+    ))
     return spark.sql(_PQ_SWEEP_SPARK_SQL)
 
 
@@ -1315,7 +1300,7 @@ def _trunc_sql(spark_side: bool) -> str:
 def ann_dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@10 of dimension-truncated cosine (d=16, 32) vs full-dim
     truth — the Matryoshka serving trade-off, measured."""
-    return _emb_sql(spark, sf_dir, _trunc_sql(True))
+    return scaled_sql(spark, sf_dir, "embeddings", _trunc_sql(True))
 
 
 # ---------------------------------------------------------------------------
@@ -1331,10 +1316,9 @@ def ann_dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exact-sum discipline exists for). Scatter and centroid-distance
 # terms are then per-dim deterministic doubles snapped back to
 # integers BEFORE the cross-dim sums, which are exact again. The
-# moment relation (labels × dims rows) is materialized once on the
-# Spark side — it feeds the scatter rollup and both sides of the
-# pairwise join, and CTE inlining would re-run the corpus explode per
-# reference.
+# moment relation (labels × dims rows) is staged once on the Spark
+# side — it feeds the scatter rollup and both sides of the pairwise
+# join.
 
 _SEP_MOMENTS = """
 SELECT label, {pos} AS d,
@@ -1411,7 +1395,9 @@ def embedding_class_separability(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized once.
     """
     load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    _materialize_view(
+    stage(
+        spark,
+        "sep_mom",
         spark.sql(
             _SEP_MOMENTS.format(
                 pos="pos",
@@ -1420,7 +1406,6 @@ def embedding_class_separability(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "LATERAL VIEW posexplode(embedding) t AS pos, x)",
             )
         ),
-        "sep_mom",
     )
     return spark.sql("WITH " + _SEP_TAIL.replace("{mom}", "sep_mom").lstrip())
 
@@ -1506,9 +1491,9 @@ def ann_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView(
         "embeddings"
     )
-    spark.sql(
+    stage(spark, "mp_lsh_buckets", spark.sql(
         _BUCKETS_CORE_SPARK + "SELECT vec_id, t, bucket FROM buckets"
-    ).localCheckpoint(eager=True).createOrReplaceTempView("mp_lsh_buckets")
+    ))
     return spark.sql(_MP_SPARK_TAIL)
 
 

@@ -27,16 +27,11 @@ from automated_data_pipeline_python_spark.functions.text import (
 from automated_data_pipeline_python_spark.functions.numeric import (
     sql_exact_sum,
 )
-from automated_data_pipeline_python_spark.queries.catalog import register
-from automated_data_pipeline_python_spark.tables import load, load_scaled
+from automated_data_pipeline_python_spark.queries.catalog import register, stage
+from automated_data_pipeline_python_spark.tables import load_scaled, scaled_sql
 
 _S_TOK = SPARK_TOKENS.format(col="text")
 _D_TOK = DUCK_TOKENS.format(col="text")
-
-
-def _docs_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(sql)
 
 
 # ---------------------------------------------------------------------------
@@ -72,7 +67,7 @@ FROM documents
 @register("text_token_counts", oracle=_TOKENS_DUCK_SQL)
 def text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace + regex token counts and a 4/3-heuristic BPE estimate."""
-    return _docs_sql(spark, sf_dir, _TOKENS_SPARK_SQL)
+    return scaled_sql(spark, sf_dir, "documents", _TOKENS_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -137,7 +132,7 @@ FROM feats
 @register("text_quality_scores", oracle=_QUALITY_DUCK_SQL)
 def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document quality features + composite score + flag."""
-    return _docs_sql(spark, sf_dir, _QUALITY_SPARK_SQL)
+    return scaled_sql(spark, sf_dir, "documents", _QUALITY_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -185,7 +180,9 @@ FROM scored
 )
 def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N-gram/stopword-profile language ID with deterministic argmax."""
-    return _docs_sql(spark, sf_dir, _langid_sql(_S_TOK, spark_stopword_hits))
+    return scaled_sql(
+        spark, sf_dir, "documents", _langid_sql(_S_TOK, spark_stopword_hits)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -239,7 +236,7 @@ def text_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys (reference pipeline/utils/cache.py:58-74) reused for content
     addressing.
     """
-    return _docs_sql(spark, sf_dir, _FP_SPARK_SQL)
+    return scaled_sql(spark, sf_dir, "documents", _FP_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -276,7 +273,7 @@ GROUP BY lang, source
 @register("text_corpus_stats", oracle=_STATS_DUCK_SQL)
 def text_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-level rollup by (lang, source)."""
-    return _docs_sql(spark, sf_dir, _STATS_SPARK_SQL)
+    return scaled_sql(spark, sf_dir, "documents", _STATS_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -328,9 +325,10 @@ def text_hash_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle. The output feeds the cosine/ANN family wherever neural
     embeddings are absent.
     """
-    return _docs_sql(
+    return scaled_sql(
         spark,
         sf_dir,
+        "documents",
         _hash_embed_sql(
             _S_TOK, " LATERAL VIEW explode(w) t AS token", spark_hash60
         ),
@@ -367,7 +365,12 @@ ORDER BY actual_lang, predicted_lang
 )
 def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID confusion matrix with per-actual-language recall."""
-    return _docs_sql(spark, sf_dir, _lang_confusion_sql(_S_TOK, spark_stopword_hits))
+    return scaled_sql(
+        spark,
+        sf_dir,
+        "documents",
+        _lang_confusion_sql(_S_TOK, spark_stopword_hits),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -416,9 +419,10 @@ ORDER BY term
 )
 def text_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-term Church burstiness (cf/df) and variance-to-mean ratio."""
-    return _docs_sql(
+    return scaled_sql(
         spark,
         sf_dir,
+        "documents",
         _burst_sql(f"SELECT doc_id, explode({_S_TOK}) AS tok FROM documents"),
     )
 
@@ -447,7 +451,7 @@ def text_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hazard the CUPED operator documents); this never sums raw doubles.
 # Spark side: the token relation (corpus-sized, referenced by both
 # doc_tokens and first_seen) and the curve (referenced by fit and the
-# output) are materialized once against CTE inlining.
+# output) are staged once.
 
 _HEAPS_CURVE = """
 doc_tokens AS (
@@ -532,26 +536,24 @@ _HEAPS_DUCK_SQL = (
 @register("text_heaps_vocab_growth", oracle=_HEAPS_DUCK_SQL)
 def text_heaps_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary-growth curve sample points + fitted Heaps k, β."""
-    from automated_data_pipeline_python_spark.queries.dedup import (
-        _materialize_view,
-    )
-
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    _materialize_view(
+    stage(
+        spark,
+        "heaps_tok",
         spark.sql(
             f"SELECT doc_id, tok AS term FROM "
             f"(SELECT doc_id, explode({_S_TOK}) AS tok FROM documents)"
         ),
-        "heaps_tok",
     )
-    _materialize_view(
+    stage(
+        spark,
+        "heaps_curve",
         spark.sql(
             "WITH "
             + _HEAPS_CURVE.replace("{tok}", "heaps_tok")
                           .replace("{div}", "DIV")
                           .lstrip()
         ),
-        "heaps_curve",
     )
     return spark.sql(
         "WITH " + _HEAPS_TAIL.replace("{curve}", "heaps_curve").lstrip()
@@ -651,7 +653,7 @@ def text_rake_phrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     One explode + one doc-keyed window + a vocabulary-sized stats join;
     no double is accumulated in engine-dependent order.
     """
-    return _docs_sql(spark, sf_dir, _rake_sql(_RAKE_SPARK))
+    return scaled_sql(spark, sf_dir, "documents", _rake_sql(_RAKE_SPARK))
 
 
 # ---------------------------------------------------------------------------
@@ -752,18 +754,17 @@ def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlap coefficient — the MOSS local-similarity primitive.
 
     The fingerprint relation feeds four consumers (df cap, both pair
-    sides, per-doc sizes); Spark inlines CTEs, so it is materialized
-    once via localCheckpoint.
+    sides, per-doc sizes), so it is staged once.
     """
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(
+    stage(spark, "win_fp", spark.sql(
         _winnow_fp_sql(spark_hash60, " LATERAL VIEW explode(idx) t AS i").format(
             seq=(
                 f"CASE WHEN length(s) >= {_WINNOW_K} THEN "
                 f"sequence(1, length(s) - {_WINNOW_K} + 1) ELSE array() END"
             )
         )
-    ).localCheckpoint(eager=True).createOrReplaceTempView("win_fp")
+    ))
     return spark.sql("WITH " + _winnow_tail("win_fp").lstrip())
 
 
@@ -823,7 +824,7 @@ def corpus_good_turing_chao1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Good-Turing missing mass + bias-corrected Chao1 richness from
     the frequency-of-frequencies table — the corpus coverage
     diagnostics an LM-data pipeline reads before committing a crawl."""
-    return _docs_sql(spark, sf_dir, _GT_SPARK_SQL)
+    return scaled_sql(spark, sf_dir, "documents", _GT_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -841,8 +842,7 @@ def corpus_good_turing_chao1(spark: SparkSession, sf_dir: str) -> DataFrame:
 # first-occurrence table is one min() aggregation keyed by the 60-bit
 # gram hash; the join back is hash-partitioned on the same key. No
 # pair enumeration anywhere — cost is O(total distinct grams), not
-# O(pairs). The gram relation feeds both sides; Spark inlines CTEs,
-# so it is materialized.
+# O(pairs). The gram relation feeds both sides, so it is staged.
 
 
 def _novelty_grams_sql(shingles: str, hash60, unnest_tpl: str) -> str:
@@ -886,12 +886,12 @@ def corpus_trigram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     order) — the crawl-saturation curve, computed by origin
     attribution instead of pair enumeration."""
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(
+    stage(spark, "nov_grams", spark.sql(
         _novelty_grams_sql(
             spark_word_shingles(_S_TOK, 3), spark_hash60,
             " LATERAL VIEW explode(sh) t AS s",
         )
-    ).localCheckpoint(eager=True).createOrReplaceTempView("nov_grams")
+    ))
     return spark.sql(_novelty_tail("nov_grams"))
 
 
@@ -1253,7 +1253,7 @@ def text_yule_k_herdan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Yule's characteristic K, Herdan's C, and the raw repeat rate
     from the frequency-of-frequencies table — corpus-level vocabulary
     concentration constants."""
-    return _docs_sql(spark, sf_dir, _yule_sql(
+    return scaled_sql(spark, sf_dir, "documents", _yule_sql(
         "regexp_extract_all(text, '[a-z]+', 0)",
         " LATERAL VIEW explode(ws) t AS w",
     ))

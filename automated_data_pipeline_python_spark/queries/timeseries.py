@@ -25,7 +25,7 @@ from automated_data_pipeline_python_spark.functions.numeric import (
     sql_normal_two_sided_p,
     sql_stable_round,
 )
-from automated_data_pipeline_python_spark.queries.catalog import register
+from automated_data_pipeline_python_spark.queries.catalog import register, stage
 from automated_data_pipeline_python_spark.session import recursion_limits
 from automated_data_pipeline_python_spark.tables import load
 
@@ -1924,9 +1924,7 @@ def events_stl_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     series, and the remainder (obs = trend + seasonal + remainder on
     the snapped grid)."""
     load(spark, sf_dir, "events").createOrReplaceTempView("events")
-    spark.sql(_STL_DAILY_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "stl_daily"
-    )
+    stage(spark, "stl_daily", spark.sql(_STL_DAILY_SQL))
     return spark.sql(
         "WITH "
         + _stl_sql(
@@ -2394,16 +2392,14 @@ def lineitem_croston_demand(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs the single-fold twin of the recursive oracle.
 
     The (brand x demand-day) idx relation feeds both the fold input
-    and the init row; Spark inlines CTEs, so it is materialized once
-    via localCheckpoint (the corpus join runs exactly once)."""
+    and the init row, so it is staged once (the corpus join runs
+    exactly once)."""
     load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     load(spark, sf_dir, "part").createOrReplaceTempView("part")
     head = _croston_daily_idx(
         "datediff(d, lag(d) OVER (PARTITION BY brand ORDER BY d))", ""
     )
-    spark.sql(head + "\nSELECT * FROM idx").localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("cro_idx")
+    stage(spark, "cro_idx", spark.sql(head + "\nSELECT * FROM idx"))
     tail = _CROSTON_SPARK.split(",\nxs AS (", 1)[1]
     return spark.sql(
         "WITH xs AS (" + tail.replace("FROM idx", "FROM cro_idx")
@@ -3542,9 +3538,7 @@ def events_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     (wrapped verbatim): the scalar forecastability features beside
     the periodogram's spectral entropy."""
     load(spark, sf_dir, "events").createOrReplaceTempView("events")
-    spark.sql(_STL_DAILY_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "stl_daily"
-    )
+    stage(spark, "stl_daily", spark.sql(_STL_DAILY_SQL))
     spark.sql(
         "WITH "
         + _stl_sql(

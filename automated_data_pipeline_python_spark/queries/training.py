@@ -28,22 +28,11 @@ from automated_data_pipeline_python_spark.functions.text import (
     spark_hash60,
     spark_word_shingles,
 )
-from automated_data_pipeline_python_spark.queries.catalog import register
-from automated_data_pipeline_python_spark.tables import load, load_scaled
+from automated_data_pipeline_python_spark.queries.catalog import register, stage
+from automated_data_pipeline_python_spark.tables import load, load_scaled, scaled_sql
 
 _S_TOK = SPARK_TOKENS.format(col="text")
 _D_TOK = DUCK_TOKENS.format(col="text")
-
-
-def _docs_sql(
-    spark: SparkSession, sf_dir: str, sql: str, scaled: bool = False
-) -> DataFrame:
-    # scaled=True only for tokenize/shingle-heavy pipelines where per-row
-    # compute dominates; cheap scan+filter shapes (sampling, mixture)
-    # stay exchange-free (tests/test_plans.py pins that).
-    loader = load_scaled if scaled else load
-    loader(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(sql)
 
 
 # ---------------------------------------------------------------------------
@@ -66,9 +55,9 @@ _CONTAM_MOD = 19
 # aggregation stay: probing a broadcast hash table per shingle beats a
 # per-row array_intersect against the full eval-set array (measured
 # 6x wall on exactly that variant).
-# The per-doc set relation is materialized (localCheckpoint): both the
-# benchmark and corpus branches explode it, and explode-of-an-attribute
-# makes InferFiltersFromGenerate add a size(shs) > 0 filter that would
+# The per-doc set relation is staged: both the benchmark and corpus
+# branches explode it, and explode-of-an-attribute makes
+# InferFiltersFromGenerate add a size(shs) > 0 filter that would
 # otherwise be pushed below the repartition exchange with the WHOLE
 # tokenize+distinct expression re-expanded into it, single-core
 # (measured 13x wall). Against checkpointed arrays the inferred filter
@@ -128,14 +117,13 @@ def contamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles|; a curation pipeline drops or flags docs above a
     threshold before training. Per-doc distinct shingle sets are
     intra-row (array_distinct, map-side — no corpus-wide DISTINCT
-    exchange or checkpoint since r12); the benchmark shingle set is
+    exchange since r12) and staged once as ``ct_sets``, which both the
+    benchmark and corpus branches explode; the benchmark shingle set is
     broadcast and the only corpus exchange left is the per-doc count
     aggregation (map-side partials).
     """
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(_CONTAM_SETS_SPARK).localCheckpoint(eager=True).createOrReplaceTempView(
-        "ct_sets"
-    )
+    stage(spark, "ct_sets", spark.sql(_CONTAM_SETS_SPARK))
     return spark.sql(_CONTAM_SPARK_SQL)
 
 
@@ -266,7 +254,7 @@ def text_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     (full-width locally, no added shuffle at real scale), so the
     sort+fold compute stays embarrassingly parallel at 100 TB.
     """
-    return _docs_sql(spark, sf_dir, _REPEAT_SPARK_MAPONLY, scaled=True)
+    return scaled_sql(spark, sf_dir, "documents", _REPEAT_SPARK_MAPONLY)
 
 
 # ---------------------------------------------------------------------------
@@ -313,7 +301,8 @@ def sample_stratified_deterministic(
     is identical across engines, retries, and partitionings — unlike
     rand()/TABLESAMPLE. Map-only: no shuffle.
     """
-    return _docs_sql(spark, sf_dir, _SAMPLE_SPARK_SQL)
+    load(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    return spark.sql(_SAMPLE_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -377,7 +366,8 @@ def pack_sequences_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     a training loader needs. Deterministic (doc_id order), one window
     shuffle on source, emission fully codegen'd.
     """
-    return _docs_sql(spark, sf_dir, _PACK_SPARK_SQL)
+    load(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    return spark.sql(_PACK_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -435,7 +425,8 @@ FROM per CROSS JOIN tot
 def mixture_domain_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language token shares + resampling weights toward a uniform
     target mixture (weight = target_share / actual_share)."""
-    return _docs_sql(spark, sf_dir, _MIX_SPARK_SQL)
+    load(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    return spark.sql(_MIX_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -487,7 +478,8 @@ FROM r WHERE rn <= {_GROUP_K}
 @register("sample_per_group_reservoir", oracle=_GROUP_SAMPLE_DUCK_SQL)
 def sample_per_group_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic k-per-stratum sample (hash-ranked reservoir)."""
-    return _docs_sql(spark, sf_dir, _GROUP_SAMPLE_SPARK_SQL)
+    load(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    return spark.sql(_GROUP_SAMPLE_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -536,7 +528,8 @@ def corpus_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort, no skew (hash keys are uniform). Deterministic across
     engines/runs via the portable SHA-derived key.
     """
-    return _docs_sql(spark, sf_dir, _shuffle_sql(spark_hash60, "STRING"))
+    load(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    return spark.sql(_shuffle_sql(spark_hash60, "STRING"))
 
 
 # ---------------------------------------------------------------------------
@@ -589,7 +582,8 @@ def sample_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact) — no float discipline needed. The deterministic hash walk
     order makes the kept set reproducible across engines and runs.
     """
-    return _docs_sql(spark, sf_dir, _budget_sql(spark_hash60, _BUDGET_SPARK_TOK, "STRING"))
+    load(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    return spark.sql(_budget_sql(spark_hash60, _BUDGET_SPARK_TOK, "STRING"))
 
 
 # ---------------------------------------------------------------------------
@@ -641,7 +635,8 @@ WHERE rn <= {_WEIGHTED_K}
 )
 def sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic weight-proportional k-per-language sample (A-ES)."""
-    return _docs_sql(spark, sf_dir, _weighted_sample_sql(spark_hash28, "STRING"))
+    load(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    return spark.sql(_weighted_sample_sql(spark_hash28, "STRING"))
 
 
 # ---------------------------------------------------------------------------
@@ -688,14 +683,13 @@ GROUP BY split, lang
 )
 def sample_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """80/10/10 deterministic doc-level split report (per split × lang)."""
-    return _docs_sql(
-        spark,
-        sf_dir,
+    load(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    return spark.sql(
         _split_sql(
             spark_hash28,
             "STRING",
             f"size({SPARK_TOKENS.format(col='text')})",
-        ),
+        )
     )
 
 
@@ -1052,7 +1046,7 @@ def feature_hashing_collisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary: used vs birthday-expected buckets, worst pile-up, and
     the occurrence-weighted collision mass — from the shared sha
     assignment a production featurizer would reuse."""
-    return _docs_sql(spark, sf_dir, _FEAT_HASH_SPARK, scaled=True)
+    return scaled_sql(spark, sf_dir, "documents", _FEAT_HASH_SPARK)
 
 
 # ---------------------------------------------------------------------------
@@ -1242,10 +1236,7 @@ def training_batch_padding_waste(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Windows are (bucket, id-sub-bucket)-partitioned (≤ 4096 rows each);
     output is bucket-count-bounded."""
-    return _docs_sql(
-        spark,
-        sf_dir,
-        _padding_waste_sql(
-            f"size({_S_TOK})", lambda a, b: f"(({a}) div ({b}))"
-        ),
+    load(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    return spark.sql(
+        _padding_waste_sql(f"size({_S_TOK})", lambda a, b: f"(({a}) div ({b}))")
     )

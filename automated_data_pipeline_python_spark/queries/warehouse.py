@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from automated_data_pipeline_python_spark.operators.scd import scd2_merge
-from automated_data_pipeline_python_spark.queries.catalog import register
+from automated_data_pipeline_python_spark.queries.catalog import register, stage
 from automated_data_pipeline_python_spark.tables import load
 
 _T0 = "1992-01-01 00:00:00"
@@ -1191,8 +1191,8 @@ GROUP BY substr(CAST(l_shipdate AS STRING), 1, 7), l_partkey
 """
 
 # mp is referenced three times (base slice, join, base-month scalar
-# subquery); Spark inlines CTEs, so the catalog fn materializes it once
-# (localCheckpoint) — the DuckDB oracle keeps the single WITH chain.
+# subquery), so the catalog fn stages it once — the DuckDB oracle keeps
+# the single WITH chain.
 _LASP_TAIL = f"""
 base AS (
     SELECT l_partkey,
@@ -1227,9 +1227,7 @@ def lineitem_price_index_laspeyres(
     base-quantity-weighted unit prices over the parts common to both
     months, with order-independent exact sums for the Σ p·q terms."""
     load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    spark.sql(_LASP_MP_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "lasp_mp"
-    )
+    stage(spark, "lasp_mp", spark.sql(_LASP_MP_SQL))
     return spark.sql("WITH " + _LASP_TAIL.format(mp="lasp_mp").lstrip())
 
 

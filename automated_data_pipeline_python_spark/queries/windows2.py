@@ -16,7 +16,7 @@ from automated_data_pipeline_python_spark.functions.text import (
     DUCK_TOKENS,
     SPARK_TOKENS,
 )
-from automated_data_pipeline_python_spark.queries.catalog import register
+from automated_data_pipeline_python_spark.queries.catalog import register, stage
 from automated_data_pipeline_python_spark.tables import load, load_scaled
 
 _S_TOK = SPARK_TOKENS.format(col="text")
@@ -143,14 +143,14 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline into each reference (2× the corpus work).
     """
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(
+    stage(spark, "tfidf_tok", spark.sql(
         f"""
         SELECT doc_id, token, count(*) AS tf
         FROM (SELECT doc_id, {_S_TOK} AS w FROM documents)
         LATERAL VIEW explode(w) t AS token
         GROUP BY doc_id, token
         """
-    ).localCheckpoint(eager=True).createOrReplaceTempView("tfidf_tok")
+    ))
     return spark.sql(
         """
         WITH tok AS (SELECT * FROM tfidf_tok),

@@ -409,6 +409,7 @@ def slo_burn_report(daily_counts: DataFrame) -> DataFrame:
     per-day counts — the catalog query's {daily}-parameterized tail
     (queries/timeseries.py _slo_tail) applied verbatim, so the
     streamed report equals events_slo_burn_rate row-for-row."""
+    from automated_data_pipeline_python_spark.queries.catalog import stage
     from automated_data_pipeline_python_spark.queries.timeseries import (
         _slo_tail,
     )
@@ -416,12 +417,9 @@ def slo_burn_report(daily_counts: DataFrame) -> DataFrame:
     spark = daily_counts.sparkSession
     # The burn tail SELF-JOINS {daily}; a memory-sink view carries the
     # same attribute ids on both sides and Spark's self-join dedup
-    # does not fire through MemoryPlan — materialize the (bounded,
-    # retention-days-sized) state first, the _materialize_view
-    # discipline.
-    daily_counts.localCheckpoint(eager=True).createOrReplaceTempView(
-        "slo_mon_daily"
-    )
+    # does not fire through MemoryPlan — stage the (bounded,
+    # retention-days-sized) state first.
+    stage(spark, "slo_mon_daily", daily_counts)
     return spark.sql(
         "WITH "
         + _slo_tail("datediff(a.d, b.d)").format(daily="slo_mon_daily")

@@ -158,6 +158,13 @@ def load_scaled(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def scaled_sql(spark: SparkSession, sf_dir: str, table: str, sql: str) -> DataFrame:
+    """Register ``table`` (read by :func:`load_scaled`) as a temp view of
+    the same name and run ``sql`` over it."""
+    load_scaled(spark, sf_dir, table).createOrReplaceTempView(table)
+    return spark.sql(sql)
+
+
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load(spark, sf_dir, name) for name in TABLE_NAMES}
 

@@ -14,6 +14,8 @@ sf0.001, sf0.01 AND sf0.1) and the pytest oracle-parity sweep.
 
 from __future__ import annotations
 
+import pytest
+
 from automated_data_pipeline_python_spark.queries import QUERIES, _PRIORITY, oracle_sql
 
 # New catalog queries added in round 11 — driver-rowed in their birth
@@ -171,3 +173,83 @@ def test_query_build_drops_its_temp_views(spark):
         assert "preexisting_view" in after
     finally:
         spark.catalog.dropTempView("preexisting_view")
+
+
+def test_failed_build_drops_its_views_and_restores_description(spark):
+    """A builder that raises after staging a view must not leak the
+    view (and the checkpoint blocks behind it) or its job description."""
+    from automated_data_pipeline_python_spark.queries.catalog import register, stage
+
+    def build(spark, sf_dir):
+        stage(spark, "failed_build_view", spark.range(3))
+        raise RuntimeError("builder failed after a stage")
+
+    sc = spark.sparkContext
+    sc.setJobDescription("caller description")
+    register("test_failing_build")(build)
+    try:
+        before = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+        with pytest.raises(RuntimeError, match="after a stage"):
+            QUERIES["test_failing_build"].fn(spark, "unused")
+        after = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+        assert after == before
+        assert sc.getLocalProperty("spark.job.description") == "caller description"
+    finally:
+        QUERIES.pop("test_failing_build")
+        sc.setJobDescription(None)
+
+
+def test_stage_jobs_are_described_query_slash_view(spark):
+    """catalog.stage runs its checkpoint under the job description
+    ``<query>/<view>``, read back from Spark's status store, and the
+    build restores the caller's description afterwards."""
+    from tests.conftest import SF_SMOKE
+
+    sc = spark.sparkContext
+    group = "test-stage-description"
+    sc.setJobGroup(group, "caller description")
+    try:
+        QUERIES["dedup_minhash_lsh"].fn(spark, SF_SMOKE)
+        assert sc.getLocalProperty("spark.job.description") == "caller description"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    described = set()
+    for job_id in sc.statusTracker().getJobIdsForGroup(group):
+        description = store.job(job_id).description()
+        if description.isDefined():
+            described.add(description.get())
+    assert "dedup_minhash_lsh/mh_sets" in described
+
+
+def test_one_stage_primitive():
+    """Checkpoint-and-name lives only in catalog.stage: no package
+    module chains localCheckpoint into createOrReplaceTempView, and the
+    old per-module helper copies are gone."""
+    import ast
+    import pathlib
+
+    import automated_data_pipeline_python_spark as pkg
+
+    chained, helpers = [], []
+    for path in sorted(pathlib.Path(pkg.__file__).parent.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.FunctionDef) and node.name in (
+                "_materialize_view", "_docs_sql", "_emb_sql",
+            ):
+                helpers.append(f"{path.name}:{node.lineno} {node.name}")
+            if (
+                path.name != "catalog.py"
+                and isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createOrReplaceTempView"
+                and isinstance(node.func.value, ast.Call)
+                and isinstance(node.func.value.func, ast.Attribute)
+                and node.func.value.func.attr == "localCheckpoint"
+            ):
+                chained.append(f"{path.name}:{node.lineno}")
+    assert chained == []
+    assert helpers == []

@@ -124,6 +124,7 @@ def lsh_candidate_counts(spark, sf_dir: str) -> dict[str, float]:
     fixture), and real corpora grow such clusters with scale even
     though this derived corpus family does not."""
     import automated_data_pipeline_python_spark.queries.dedup as D
+    from automated_data_pipeline_python_spark.queries.catalog import stage
     from automated_data_pipeline_python_spark.tables import load_scaled
 
     if not os.path.exists(os.path.join(sf_dir, "documents.parquet")):
@@ -131,7 +132,7 @@ def lsh_candidate_counts(spark, sf_dir: str) -> dict[str, float]:
     load_scaled(spark, sf_dir, "documents").createOrReplaceTempView(
         "documents"
     )
-    D._materialize_view(spark.sql(D._MINHASH_SETS_SPARK), "mh_sets")
+    stage(spark, "mh_sets", spark.sql(D._MINHASH_SETS_SPARK))
 
     def cand_count(tail: str) -> int:
         sql = tail[: tail.index("-- verify")].rstrip().rstrip(",")

@@ -16,6 +16,7 @@ sys.path.insert(0, REPO)
 
 from automated_data_pipeline_python_spark.session import get_spark  # noqa: E402
 from automated_data_pipeline_python_spark.queries import dedup as D  # noqa: E402
+from automated_data_pipeline_python_spark.queries.catalog import stage  # noqa: E402
 from automated_data_pipeline_python_spark.tables import load_scaled  # noqa: E402
 
 
@@ -33,13 +34,10 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     t("load+view", lambda: load_scaled(spark, sf, "documents")
       .createOrReplaceTempView("documents"))
-    t("cp_sets", lambda: D._materialize_view(
-        spark.sql(D._CAPPED_SETS_SPARK), "cp_sets"))
-    t("cp_hot", lambda: D._materialize_view(
-        spark.sql(D._CAPPED_HOT_SPARK), "cp_hot"))
+    t("cp_sets", lambda: stage(spark, "cp_sets", spark.sql(D._CAPPED_SETS_SPARK)))
+    t("cp_hot", lambda: stage(spark, "cp_hot", spark.sql(D._CAPPED_HOT_SPARK)))
     print("hot rows:", spark.table("cp_hot").count(), flush=True)
-    t("cp_cold", lambda: D._materialize_view(
-        spark.sql(D._CAPPED_COLD_SPARK), "cp_cold"))
+    t("cp_cold", lambda: stage(spark, "cp_cold", spark.sql(D._CAPPED_COLD_SPARK)))
     print("cold rows:", spark.table("cp_cold").count(), flush=True)
     cand_sql = """
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b

@@ -58,14 +58,14 @@ def main() -> None:
         "- *pushed-filter scans*: predicates reached the parquet reader",
         "  (`PushedFilters`) — no full-scan-then-filter.",
         "- *scans = 0 is not \"no read\"*: queries that eagerly",
-        "  materialize a shared subtree via `localCheckpoint` (the",
+        "  materialize a shared subtree via `catalog.stage` (the",
         "  dedup/ANN/LM families) carry their parquet scans inside the",
         "  checkpointed stage, which the returned plan no longer shows —",
         "  those stages are separately audited by the checkpoint spy in",
         "  tests/test_global_window_allowlist.py.",
         "- *exchanges*: shuffles in the executed plan (post-AQE; reused",
         "  exchanges excluded). Star joins show low counts because every",
-        "  dimension broadcasts. For queries that localCheckpoint a",
+        "  dimension broadcasts. For queries that stage a",
         "  shared subtree (the ANN eval family), exchange/codegen counts",
         "  can shift a few units between generation sessions as exchange",
         "  reuse kicks in or not — the load-bearing columns (scans,",

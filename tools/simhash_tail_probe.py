@@ -17,6 +17,7 @@ sys.path.insert(0, "/root/repo")
 
 from automated_data_pipeline_python_spark.session import get_spark  # noqa: E402
 from automated_data_pipeline_python_spark.queries import dedup as D  # noqa: E402
+from automated_data_pipeline_python_spark.queries.catalog import stage  # noqa: E402
 from automated_data_pipeline_python_spark.tables import load_scaled  # noqa: E402
 
 
@@ -27,9 +28,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     load_scaled(spark, sf, "documents").createOrReplaceTempView("documents")
     t0 = time.perf_counter()
-    D._materialize_view(
-        spark.sql(D._SIMHASH_SPARK_SQL), "simhash_sig"
-    )
+    stage(spark, "simhash_sig", spark.sql(D._SIMHASH_SPARK_SQL))
     print(f"sig core materialize: {time.perf_counter() - t0:.2f}s",
           flush=True)
     # bucket census: how big do the 4x256 chunk buckets get?
